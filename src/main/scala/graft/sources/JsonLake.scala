@@ -20,15 +20,21 @@ object JsonLake {
 
   val CorruptCol = "_corrupt_record"
 
+  /** The landing-reader contract every lake reader applies, batch or
+    * streaming: the enforced schema plus [[CorruptCol]], read with
+    * [[Permissive]] so a malformed record lands in that column.
+    */
+  def landingSchema(schema: StructType): StructType =
+    schema.add(StructField(CorruptCol, StringType, nullable = true))
+
+  val Permissive: Map[String, String] = Map(
+    "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptCol)
+
   /** Read line-delimited JSON with an enforced schema; malformed lines
     * land in [[CorruptCol]], well-formed rows get it null.
     */
   def readJson(s: SparkSession, path: String, schema: StructType): DataFrame =
-    s.read
-      .schema(schema.add(StructField(CorruptCol, StringType, nullable = true)))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(path)
+    s.read.schema(landingSchema(schema)).options(Permissive).json(path)
 
   /** Compat reader for the reference's ACTUAL legacy lake layout:
     * multi-line JSON ARRAYS, one array per scrape file
@@ -40,10 +46,7 @@ object JsonLake {
     */
   def readJsonArray(s: SparkSession, path: String,
       schema: StructType): DataFrame =
-    s.read
-      .schema(schema.add(StructField(CorruptCol, StringType, nullable = true)))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
+    s.read.schema(landingSchema(schema)).options(Permissive)
       .option("multiLine", value = true)
       .json(path)
 
@@ -58,10 +61,7 @@ object JsonLake {
     */
   def readCsv(s: SparkSession, path: String, schema: StructType,
       header: Boolean = true, delimiter: String = ","): DataFrame =
-    s.read
-      .schema(schema.add(StructField(CorruptCol, StringType, nullable = true)))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
+    s.read.schema(landingSchema(schema)).options(Permissive)
       .option("header", header.toString)
       .option("delimiter", delimiter)
       .csv(path)
@@ -69,13 +69,14 @@ object JsonLake {
   /** Split an ingested frame into (clean, quarantined) — the reference
     * drops rows missing required fields (transform_job.py:193-195);
     * quarantining instead keeps the audit trail a production lake needs.
+    *
+    * Caches `df`: the caller unpersists it after the splits' last
+    * reader ([[graft.operators.Pipeline.withOffers]] does).
     */
   def quarantine(df: DataFrame): (DataFrame, DataFrame) = {
     // Spark refuses to evaluate a predicate on ONLY the corrupt-record
     // column of a raw file scan (the parser would need a second pass);
-    // the documented contract is to materialize first. Both splits are
-    // consumed right after ingest (write clean, write audit), so the
-    // cache is read twice then evicted by the ContextCleaner.
+    // the documented contract is to materialize first.
     val raw = df.cache()
     val clean = raw.filter(col(CorruptCol).isNull).drop(CorruptCol)
     val bad = raw.filter(col(CorruptCol).isNotNull)

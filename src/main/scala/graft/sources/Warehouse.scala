@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util.Properties
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,6 +66,20 @@ object Warehouse {
     path.fold(w)(p => w.option("path", p)).saveAsTable(table)
   }
 
+  /** The parquet table at `path`, or None when nothing exists there.
+    * Only a missing path means "no table yet": a table that exists but
+    * cannot be read fails with its path, because the callers would
+    * otherwise start it over and lose what it holds.
+    */
+  private def readIfExists(s: SparkSession, path: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) None
+    else try Some(s.read.parquet(path)) catch {
+      case NonFatal(e) =>
+        throw new java.io.IOException(s"cannot read the table at $path", e)
+    }
+  }
+
   /** Incremental get-or-create for a parquet dimension — the EXACT
     * semantics of the reference's per-row `get_or_create`
     * (insert_to_postgres.py:60-84) done set-based: existing values keep
@@ -80,7 +96,7 @@ object Warehouse {
     val s = values.sparkSession
     val valueCols = values.columns.toSeq
     val incoming = values.distinct()
-    scala.util.Try(s.read.parquet(path)).toOption match {
+    readIfExists(s, path) match {
       case None =>
         graft.functions.Keys.denseIds(incoming, Nil, valueCols, idCol)
           .write.mode(SaveMode.Overwrite).parquet(path)
@@ -135,7 +151,7 @@ object Warehouse {
     // opposite order would leave stored keys missing from the bloom; on
     // retry those keys probe definitely-new, skip the exact join, and
     // append duplicates — silently breaking exactly-once.
-    scala.util.Try(s.read.parquet(dataPath)).toOption match {
+    readIfExists(s, dataPath) match {
       case None =>
         val mat = incoming.localCheckpoint(true)
         bloomOf(mat).write.mode(SaveMode.Overwrite).parquet(bloomPath)
@@ -242,25 +258,6 @@ object Warehouse {
   def readJdbc(s: SparkSession, url: String, table: String,
       props: Properties = new Properties()): DataFrame =
     s.read.jdbc(url, table, props)
-
-  /** ORC twin of [[writeFactPartitioned]] — same partition-aligned
-    * single-writer-per-partition shaping, different columnar wire
-    * format (some warehouses standardize on ORC; the scale mechanics
-    * are format-independent, which is the point of keeping them in
-    * one place). Zstd keeps parity with the parquet default.
-    */
-  def writeFactPartitionedOrc(fact: DataFrame, path: String,
-      partitionCol: String, clusterCol: String): Unit =
-    fact
-      .repartition(col(partitionCol))
-      .sortWithinPartitions(clusterCol)
-      .write
-      .mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .partitionBy(partitionCol)
-      .orc(path)
-
-  def readOrc(s: SparkSession, path: String): DataFrame = s.read.orc(path)
 
   /** TYPE-2 slowly-changing dimension upsert — the history-keeping
     * sibling of [[upsertDim]]'s type-1 get-or-create (the reference

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import graft.operators.{DataQuality, Pipeline}
-import graft.sources.{JsonLake, Warehouse}
+import graft.operators.{DataQuality, Pipeline, SkillExtract}
+import graft.sources.{JsonLake, ManifestLog, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{StringType, StructField}
 
 /** The reference's INCREMENTAL load path as a stream: scraper JSON
   * lands in the lake, each micro-batch cleans + enriches and upserts
@@ -17,32 +16,35 @@ import org.apache.spark.sql.types.{StringType, StructField}
   * Celery-retry + row-INSERT flow approximates with PK conflicts).
   *
   * Batch `Pipeline.run` stays the rebuild path; this is the tailing
-  * path a production lake runs continuously. Cross-batch offer dedup is
-  * the streaming dedup operator's job ([[Streaming.dedupStream]] shape)
-  * — within a batch, `Pipeline.clean` dedups by job_url.
+  * path a production lake runs continuously. Both load the one star
+  * definition in [[Pipeline]], which also lists the differences between
+  * them kept on purpose. Cross-batch offer dedup is the streaming dedup
+  * operator's job ([[Streaming.dedupStream]] shape) — within a batch,
+  * `Pipeline.clean` dedups by job_url.
   */
 object StreamingPipeline {
 
-  /** Start the incremental loader over `lakeDir`; AvailableNow drains
-    * what exists and stops (rerun with the same checkpoint to pick up
-    * only NEW files).
+  /** Drain what exists under `lakeDir` through the landing-reader
+    * contract into `sink`, one call per micro-batch, and stop
+    * (AvailableNow; rerun with the same checkpoint to pick up only NEW
+    * files).
     */
-  def start(s: SparkSession, lakeDir: String, outDir: String,
-      checkpoint: String): StreamingQuery = {
-    val schema = Pipeline.offerSchema
-      .add(StructField(JsonLake.CorruptCol, StringType, nullable = true))
-    val raw = s.readStream.schema(schema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", JsonLake.CorruptCol)
+  private def drain(s: SparkSession, lakeDir: String, checkpoint: String)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    s.readStream.schema(JsonLake.landingSchema(Pipeline.offerSchema))
+      .options(JsonLake.Permissive)
       .json(lakeDir)
-    raw.writeStream
+      .writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        loadBatch(batch, outDir, batchId)
-      }
+      .foreachBatch(sink)
       .trigger(Trigger.AvailableNow())
       .start()
-  }
+
+  /** Start the incremental loader over `lakeDir`. */
+  def start(s: SparkSession, lakeDir: String, outDir: String,
+      checkpoint: String): StreamingQuery =
+    drain(s, lakeDir, checkpoint)((batch, batchId) =>
+      loadBatch(batch, outDir, batchId))
 
   /** Post-clean invariants the pipeline itself must uphold: a
     * violation means a pipeline regression, not bad input (bad input is
@@ -68,60 +70,26 @@ object StreamingPipeline {
     */
   def loadBatch(batch: DataFrame, outDir: String, batchId: Long = -1L,
       checks: Seq[(String, org.apache.spark.sql.Column)] = offerChecks)
-      : Unit = {
-    val (ok, bad) = JsonLake.quarantine(batch)
-    val offers = Pipeline.enrich(Pipeline.clean(ok))
-
+      : Unit = Pipeline.withOffers(batch) { (offers, bad) =>
     val gate = DataQuality.constraintSuite(offers, checks)
       .withColumn("batch_id", lit(batchId))
     gate.write.mode("append").parquet(s"$outDir/load_audit")
-    val failed = gate.filter(!col("passed")).limit(1).count() > 0
-    if (failed) {
+    if (gate.filter(!col("passed")).limit(1).count() > 0)
       offers.write.mode("append").parquet(s"$outDir/rejected_batches")
-      bad.write.mode("append").json(s"$outDir/quarantine")
-      return
+    else {
+      val dims = Pipeline.factDims.map(d => Warehouse.upsertDim(
+        offers.select(d.key.as("value")),
+        s"$outDir/${d.table}", d.id))
+      Pipeline.facts(offers, dims)
+        .write.mode("append").parquet(s"$outDir/fact_offre")
+      val links = Pipeline.offerSkills(offers,
+        SkillExtract.vocabDf(batch.sparkSession))
+      val dSkill = Warehouse.upsertDim(
+        links.select(col("nom"), col("type_skill")),
+        s"$outDir/dim_skill", "id_skill")
+      Pipeline.bridge(links, dSkill)
+        .write.mode("append").parquet(s"$outDir/offre_skill")
     }
-
-    def up(natural: org.apache.spark.sql.Column, dim: String, id: String) =
-      Warehouse.upsertDim(offers.select(natural.as("value")),
-        s"$outDir/$dim", id)
-    val dSource = up(lower(trim(col("via"))), "dim_source", "id_source")
-    val dContrat = up(lower(trim(col("contrat"))), "dim_contrat", "id_contrat")
-    val dTitre = up(col("titre_homogene"), "dim_titre", "id_titre")
-    val dComp = up(lower(trim(col("compagnie"))), "dim_compagnie",
-      "id_compagnie")
-    val dEtudes = up(lower(trim(col("niveau_etudes"))), "dim_niveau_etudes",
-      "id_niveau_etudes")
-    val dExp = up(lower(trim(col("niveau_experience"))),
-      "dim_niveau_experience", "id_niveau_experience")
-
-    val fact = offers
-      .join(broadcast(dSource), lower(trim(col("via"))) === dSource("value"))
-      .join(broadcast(dContrat),
-        lower(trim(col("contrat"))) === dContrat("value"))
-      .join(broadcast(dTitre), col("titre_homogene") === dTitre("value"))
-      .join(broadcast(dComp), lower(trim(col("compagnie"))) === dComp("value"))
-      .join(broadcast(dEtudes),
-        lower(trim(col("niveau_etudes"))) === dEtudes("value"))
-      .join(broadcast(dExp),
-        lower(trim(col("niveau_experience"))) === dExp("value"))
-      .select(col("job_url"), col("pub_date"), col("id_source"),
-        col("id_contrat"), col("id_titre"), col("id_compagnie"),
-        col("id_niveau_etudes"), col("id_niveau_experience"),
-        col("description"), col("competences"), col("secteur"),
-        col("niveau_qualification"))
-    fact.write.mode("append").parquet(s"$outDir/fact_offre")
-
-    // skill dim (get-or-create on the nom+type pair) and bridge
-    val links = Pipeline.offerSkills(offers,
-      graft.operators.SkillExtract.vocabDf(batch.sparkSession))
-    val dSkill = Warehouse.upsertDim(
-      links.select(col("nom"), col("type_skill")),
-      s"$outDir/dim_skill", "id_skill")
-    links.join(broadcast(dSkill), Seq("nom", "type_skill"))
-      .select(col("job_url"), col("id_skill")).distinct()
-      .write.mode("append").parquet(s"$outDir/offre_skill")
-
     bad.write.mode("append").json(s"$outDir/quarantine")
   }
 
@@ -149,24 +117,11 @@ object StreamingPipeline {
     */
   def startJdbcPublish(s: SparkSession, lakeDir: String, url: String,
       table: String, checkpoint: String,
-      props: java.util.Properties): StreamingQuery = {
-    val schema = Pipeline.offerSchema
-      .add(StructField(JsonLake.CorruptCol, StringType, nullable = true))
-    s.readStream.schema(schema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", JsonLake.CorruptCol)
-      .json(lakeDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (ok, _) = JsonLake.quarantine(batch)
-        val offers = Pipeline.enrich(Pipeline.clean(ok))
+      props: java.util.Properties): StreamingQuery =
+    drain(s, lakeDir, checkpoint)((batch, batchId) =>
+      Pipeline.withOffers(batch)((offers, _) =>
         Warehouse.publishJdbcIdempotent(
-          jdbcOfferCols(offers), url, table, batchId, props)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+          jdbcOfferCols(offers), url, table, batchId, props)))
 
   /** Drain all currently-available lake files into the JDBC warehouse
     * and stop (rerun with the same checkpoint to publish only NEW
@@ -190,26 +145,14 @@ object StreamingPipeline {
     * file skipping works for key-probe reads. (round 5)
     */
   def startManifestPublish(s: SparkSession, lakeDir: String,
-      tablePath: String, checkpoint: String): StreamingQuery = {
-    val schema = Pipeline.offerSchema
-      .add(StructField(JsonLake.CorruptCol, StringType, nullable = true))
-    s.readStream.schema(schema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", JsonLake.CorruptCol)
-      .json(lakeDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (ok, _) = JsonLake.quarantine(batch)
-        val offers = jdbcOfferCols(Pipeline.enrich(Pipeline.clean(ok)))
-          .withColumn("offer_key", xxhash64(col("job_url")))
-        graft.sources.ManifestLog.commitIdempotent(
-          offers, tablePath, "offer_key", batchId)
+      tablePath: String, checkpoint: String): StreamingQuery =
+    drain(s, lakeDir, checkpoint)((batch, batchId) =>
+      Pipeline.withOffers(batch) { (offers, _) =>
+        ManifestLog.commitIdempotent(jdbcOfferCols(offers)
+          .withColumn("offer_key", xxhash64(col("job_url"))),
+          tablePath, "offer_key", batchId)
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      })
 
   /** Drain all currently-available lake files into the manifest table
     * and stop.

@@ -26,7 +26,11 @@ class PipelineSpec extends AnyFunSuite {
 
   test("lake -> star warehouse: dedup, quarantine, FK integrity") {
     val out = Files.createTempDirectory("graft_pipe_out").toFile.getAbsolutePath
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
     val r = Pipeline.run(spark, writeLake(), out)
+    // the quarantine's cache is released once the run has read it
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cached).isEmpty,
+      "Pipeline.run left a cached RDD behind")
 
     assert(r.nRaw === 6)
     assert(r.nQuarantined === 1)

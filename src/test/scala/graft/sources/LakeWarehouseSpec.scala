@@ -126,30 +126,6 @@ class LakeWarehouseSpec extends AnyFunSuite {
     assert(sk > 0L)
   }
 
-  test("ORC fact write round-trips with identical rows and pruned partitioned reads") {
-    val dir = Files.createTempDirectory("graft_orc").toFile.getAbsolutePath
-    val fact = Tables.orders(spark, sf)
-      .select(col("o_orderkey"), col("o_custkey"),
-        (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
-          .as("ym"))
-    Warehouse.writeFactPartitionedOrc(fact, s"$dir/fact", "ym", "o_orderkey")
-    val back = Warehouse.readOrc(spark, s"$dir/fact")
-    assert(back.count() === fact.count())
-    // row-for-row identical to the source frame
-    assert(back.select("o_orderkey", "o_custkey", "ym")
-      .exceptAll(fact.select("o_orderkey", "o_custkey", "ym")).count() === 0L)
-    // same one-writer-per-partition layout as the parquet path
-    val files = new java.io.File(s"$dir/fact").listFiles()
-      .filter(_.getName.startsWith("ym="))
-      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".orc")))
-    assert(files.nonEmpty)
-    files.foreach { case (p, n) => assert(n === 1, s"partition $p has $n files") }
-    val plan = back.filter(col("ym") === 199706).queryExecution
-      .executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(ym"),
-      s"no partition pruning in ORC plan:\n$plan")
-  }
-
   test("dynamic partition pruning: a filtered dim prunes fact partitions at runtime") {
     val dir = Files.createTempDirectory("graft_dpp").toFile.getAbsolutePath
     val fact = Tables.orders(spark, sf)
@@ -276,6 +252,23 @@ class LakeWarehouseSpec extends AnyFunSuite {
       spark.sql("DROP TABLE IF EXISTS graft_b_flq_items")
       spark.sql("DROP TABLE IF EXISTS graft_b_flq_orders")
     }
+  }
+
+  test("upsertDim: an existing dim that cannot be read fails, files untouched") {
+    import spark.implicits._
+    val dim = Files.createTempDirectory("graft_dim").toString + "/dim_source"
+    Warehouse.upsertDim(Seq("alpha", "beta").toDF("value"), dim, "id_source")
+    // schema inference reads the summary file first, so a junk one makes
+    // the dim unreadable while its data files are intact
+    Files.write(java.nio.file.Paths.get(dim, "_common_metadata"),
+      "not parquet".getBytes)
+    def files() = new java.io.File(dim).listFiles().map(f =>
+      f.getName -> java.util.Arrays.hashCode(Files.readAllBytes(f.toPath))).toMap
+    val before = files()
+    val e = intercept[Exception](
+      Warehouse.upsertDim(Seq("gamma").toDF("value"), dim, "id_source"))
+    assert(e.getMessage.contains(dim))
+    assert(files() === before, "a failed read must not rewrite the dim")
   }
 
   test("dedupAppend: bloom-routed exactly-once keys across three batches") {

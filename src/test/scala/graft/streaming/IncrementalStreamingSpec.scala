@@ -77,12 +77,17 @@ class IncrementalStreamingSpec extends AnyFunSuite {
     val lake = Files.createTempDirectory("graft_sp_lake").toString
     val out = Files.createTempDirectory("graft_sp_out").toString
     val ckpt = Files.createTempDirectory("graft_sp_ckpt").toString
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    def assertNoCacheLeft(what: String) =
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- cached).isEmpty,
+        s"$what left a cached RDD behind")
 
     // batch 1: sources alpha and beta
     val w1 = new java.io.PrintWriter(s"$lake/b1.jsonl")
     w1.println(offer("u1", "alpha")); w1.println(offer("u2", "beta"))
     w1.close()
     StreamingPipeline.runOnce(spark, lake, out, ckpt)
+    assertNoCacheLeft("runOnce")
     val dim1 = spark.read.parquet(s"$out/dim_source").collect()
       .map(r => r.getAs[String]("value") -> r.getAs[Int]("id_source")).toMap
     assert(dim1 === Map("alpha" -> 1, "beta" -> 2))
@@ -128,22 +133,39 @@ class IncrementalStreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/dim_source").count() === 3)
 
     // EQUIVALENCE with the batch rebuild: loading the same lake in one
-    // shot must yield the same facts once surrogate ids are resolved
-    // back to natural values (ids themselves may number differently —
-    // batch sorts globally, incremental per arrival batch)
+    // shot must yield the same facts and skill links once every
+    // surrogate id is resolved back to its natural value (ids themselves
+    // may number differently — batch sorts globally, incremental per
+    // arrival batch), and fact_offre must read back with one schema
     val outB = Files.createTempDirectory("graft_sp_rebuild").toString
     graft.operators.Pipeline.run(spark, lake, outB)
-    def resolved(dir: String): Set[(String, String, String)] = {
+    assertNoCacheLeft("Pipeline.run")
+    val factDims = Seq("dim_source" -> "id_source",
+      "dim_contrat" -> "id_contrat", "dim_titre" -> "id_titre",
+      "dim_compagnie" -> "id_compagnie",
+      "dim_niveau_etudes" -> "id_niveau_etudes",
+      "dim_niveau_experience" -> "id_niveau_experience")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSet
+    def resolved(dir: String) = {
       val f = spark.read.parquet(s"$dir/fact_offre")
-      val dSrc = spark.read.parquet(s"$dir/dim_source")
-        .withColumnRenamed("value", "src_value")
-      val dCon = spark.read.parquet(s"$dir/dim_contrat")
-        .withColumnRenamed("value", "con_value")
-      f.join(dSrc, "id_source").join(dCon, "id_contrat")
-        .select("job_url", "src_value", "con_value").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+      val facts = factDims.foldLeft(f) { case (df, (d, id)) =>
+        df.join(spark.read.parquet(s"$dir/$d")
+          .select(col(id), col("value").as(d)), id).drop(id)
+      }
+      val skills = spark.read.parquet(s"$dir/offre_skill")
+        .join(spark.read.parquet(s"$dir/dim_skill"), "id_skill")
+        .select("job_url", "nom", "type_skill")
+      (rows(facts.select(facts.columns.sorted.map(col): _*)), rows(skills))
     }
-    assert(resolved(out) === resolved(outB))
+    val (streamFacts, streamSkills) = resolved(out)
+    val (rebuildFacts, rebuildSkills) = resolved(outB)
+    assert(streamFacts.size === 4)
+    assert(streamFacts === rebuildFacts)
+    assert(streamSkills.nonEmpty)
+    assert(streamSkills === rebuildSkills)
+    assert(spark.read.parquet(s"$out/fact_offre").schema ===
+      spark.read.parquet(s"$outB/fact_offre").schema)
   }
 
   test("exactly-once JDBC publish: two micro-batches, a replay, and a partial-failure retry") {
