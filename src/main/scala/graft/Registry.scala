@@ -41,5 +41,6 @@ object Registry {
       operators.EntityRes.queries ++
       operators.Multimodal.queries
 
-  def byName(name: String): Q = all.find(_.name == name).get
+  def byName(name: String): Q =
+    all.find(_.name == name).getOrElse(sys.error(s"unknown query: $name"))
 }

@@ -256,8 +256,9 @@ object Dedup {
     * corpus's replica-family near-dups. The in-suite wall e(1→3) ≈
     * 1.5–1.6 therefore sits UNDER its own output growth
     * (e = log(9.59)/log(3) ≈ 2.06): the superlinearity is the pair
-    * output itself, not the operator (tools/ProfileMinhash reproduces
-    * the measurement; SPARK_GRAFT_PROFILE_ROUNDS=1 for one pass).
+    * output itself, not the operator (the legs' walls and shuffle bytes
+    * are recorded in SURVEY §7a.1 and tools/bench_last_sf{1.0,3.0}f32.json;
+    * `graft.Bench dedup_minhash_lsh` re-times it at any SF).
     */
   def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame =
     dedupMinhashLsh(s, dir, D)

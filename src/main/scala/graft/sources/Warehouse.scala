@@ -96,17 +96,15 @@ object Warehouse {
     val s = values.sparkSession
     val valueCols = values.columns.toSeq
     val incoming = values.distinct()
-    readIfExists(s, path) match {
-      case None =>
-        graft.functions.Keys.denseIds(incoming, Nil, valueCols, idCol)
-          .write.mode(SaveMode.Overwrite).parquet(path)
-      case Some(existing) =>
-        val novel = incoming.join(existing, valueCols, "left_anti")
-        val maxId = existing.agg(max(col(idCol))).head.getInt(0)
-        graft.functions.Keys.denseIds(novel, Nil, valueCols, idCol)
-          .withColumn(idCol, (col(idCol) + lit(maxId)).cast("int"))
-          .write.mode(SaveMode.Append).parquet(path)
-    }
+    val existing = readIfExists(s, path)
+    val novel = existing.fold(incoming)(incoming.join(_, valueCols, "left_anti"))
+    // an absent or empty dim (a first batch whose lines were all
+    // corrupt writes one) numbers from 1; the append creates the path
+    val maxId = existing.fold(0)(
+      _.agg(coalesce(max(col(idCol)), lit(0))).head.getInt(0))
+    graft.functions.Keys.denseIds(novel, Nil, valueCols, idCol)
+      .withColumn(idCol, (col(idCol) + lit(maxId)).cast("int"))
+      .write.mode(SaveMode.Append).parquet(path)
     s.read.parquet(path)
   }
 

@@ -3,7 +3,7 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Aggregated task-level resource metrics for one measured action —
   * the observability tier behind the engine's scale claims. Plans argue
@@ -85,30 +85,6 @@ object ResourceAudit {
         inBytes.get, inRecs.get, srBytes.get, srRecs.get,
         swBytes.get, swRecs.get, spill.get, gcMs.get))
     } finally sc.removeSparkListener(listener)
-  }
-
-  /** Per-query resource audit as a queryable DataFrame: runs each named
-    * registered query against `dir` (fully materialized via the noop
-    * sink) and emits one row of wall time + task metrics per query —
-    * the round-over-round frame the scale claims are checked against.
-    */
-  def auditQueries(spark: SparkSession, dir: String,
-      names: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val byName = graft.Registry.all.map(q => q.name -> q).toMap
-    names.map { n =>
-      val q = byName.getOrElse(n, sys.error(s"unknown query: $n"))
-      val t0 = System.nanoTime()
-      val (_, m) = measure(spark) {
-        q.fn(spark, dir).write.format("noop").mode("overwrite").save()
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      (n, wall, m.tasks, m.inputBytes, m.inputRecords,
-        m.shuffleReadBytes, m.shuffleWriteBytes, m.shuffleWriteRecords,
-        m.spillBytes, m.taskSpread, m.gcTimeMs)
-    }.toDF("query", "wall_sec", "tasks", "input_bytes", "input_records",
-      "shuffle_read_bytes", "shuffle_write_bytes", "shuffle_write_records",
-      "spill_bytes", "task_spread", "gc_time_ms")
   }
 }
 

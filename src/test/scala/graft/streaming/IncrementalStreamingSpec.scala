@@ -14,6 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class IncrementalStreamingSpec extends AnyFunSuite {
   import SharedSpark._
 
+  private def offer(url: String, via: String): String =
+    s"""{"job_url":"$url","titre":"t","via":"$via","publication_date":"2024-03-05","description":"hash join data","contrat":"CDI","companie":"Acme","niveau_etudes":"Master","niveau_experience":"junior"}"""
+
   test("watermark advances across micro-batches; emissions match batch agg") {
     // split the events table into 3 time-ordered files in a flat dir
     val src = graft.sources.Tables.events(spark, sf)
@@ -72,8 +75,6 @@ class IncrementalStreamingSpec extends AnyFunSuite {
   }
 
   test("streaming pipeline: get-or-create ids stable across micro-batches, exactly-once") {
-    def offer(url: String, via: String): String =
-      s"""{"job_url":"$url","titre":"t","via":"$via","publication_date":"2024-03-05","description":"hash join data","contrat":"CDI","companie":"Acme","niveau_etudes":"Master","niveau_experience":"junior"}"""
     val lake = Files.createTempDirectory("graft_sp_lake").toString
     val out = Files.createTempDirectory("graft_sp_out").toString
     val ckpt = Files.createTempDirectory("graft_sp_ckpt").toString
@@ -168,12 +169,30 @@ class IncrementalStreamingSpec extends AnyFunSuite {
       spark.read.parquet(s"$outB/fact_offre").schema)
   }
 
+  test("streaming pipeline: an all-corrupt first batch leaves later batches loadable") {
+    val lake = Files.createTempDirectory("graft_sp0_lake").toString
+    val out = Files.createTempDirectory("graft_sp0_out").toString
+    val ckpt = Files.createTempDirectory("graft_sp0_ckpt").toString
+    val w0 = new java.io.PrintWriter(s"$lake/b0.jsonl")
+    w0.println("not json at all"); w0.println("{\"job_url\": broken")
+    w0.close()
+    StreamingPipeline.runOnce(spark, lake, out, ckpt)
+    val w1 = new java.io.PrintWriter(s"$lake/b1.jsonl")
+    w1.println(offer("u1", "alpha"))
+    w1.close()
+    StreamingPipeline.runOnce(spark, lake, out, ckpt)
+    val fact = spark.read.parquet(s"$out/fact_offre").collect()
+    assert(fact.map(_.getAs[String]("job_url")).toSeq === Seq("u1"))
+    assert(fact.head.getAs[Int]("id_source") === 1)
+    val dim = spark.read.parquet(s"$out/dim_source").collect()
+      .map(r => r.getAs[String]("value") -> r.getAs[Int]("id_source")).toMap
+    assert(dim === Map("alpha" -> 1))
+  }
+
   test("exactly-once JDBC publish: two micro-batches, a replay, and a partial-failure retry") {
     import graft.operators.Pipeline
     import graft.sources.{JsonLake, Warehouse}
     import org.apache.spark.sql.types.{StringType, StructField}
-    def offer(url: String, via: String): String =
-      s"""{"job_url":"$url","titre":"t","via":"$via","publication_date":"2024-03-05","description":"hash join data","contrat":"CDI","companie":"Acme","niveau_etudes":"Master","niveau_experience":"junior"}"""
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
     val url = "jdbc:derby:memory:graftpub;create=true"
@@ -232,8 +251,6 @@ class IncrementalStreamingSpec extends AnyFunSuite {
   test("exactly-once manifest publish: each batch is one commit, replay is a no-op") {
     import graft.sources.ManifestLog
     import spark.implicits._
-    def offer(url: String, via: String): String =
-      s"""{"job_url":"$url","titre":"t","via":"$via","publication_date":"2024-03-05","description":"hash join data","contrat":"CDI","companie":"Acme","niveau_etudes":"Master","niveau_experience":"junior"}"""
     val lake = Files.createTempDirectory("graft_mp_lake").toString
     val ckpt = Files.createTempDirectory("graft_mp_ckpt").toString
     val table = Files.createTempDirectory("graft_mp_tbl").toString + "/t"

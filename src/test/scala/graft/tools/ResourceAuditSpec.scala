@@ -71,16 +71,4 @@ class ResourceAuditSpec extends AnyFunSuite {
     assert(BytePins.drift(pins, "sf0.1",
       Map("steady" -> 100.5, "flip" -> 0.03, "tiny" -> 0.1)) === Seq.empty)
   }
-
-  test("auditQueries emits one measured row per requested query") {
-    val rows = ResourceAudit.auditQueries(spark, sf, Seq("q1_agg", "q5_region_revenue"))
-      .collect()
-    assert(rows.map(_.getString(0)).toSeq === Seq("q1_agg", "q5_region_revenue"))
-    rows.foreach { r =>
-      assert(r.getDouble(1) > 0.0, "wall_sec")
-      assert(r.getLong(2) > 0L, "tasks")
-      assert(r.getLong(3) > 0L, "input_bytes")
-      assert(r.getDouble(9) >= 1.0, "task_spread")
-    }
-  }
 }

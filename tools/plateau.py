@@ -46,7 +46,10 @@ def main():
     if len(args) < 2:
         sys.exit(__doc__)
     runs = [load(a) for a in args]
-    queries = list(runs[0]["queries"].keys())
+    # a query that failed in a pass is absent from that pass's map:
+    # take every query any pass timed, and its min/median over the
+    # passes that timed it
+    queries = list(dict.fromkeys(q for r in runs for q in r["queries"]))
 
     # working set leads (VERDICT r14 item 3): audit tiers are
     # output-bound by design and would otherwise dominate totals
@@ -62,6 +65,7 @@ def main():
           "  ".join(f"{ws(r):.1f}s" for r in runs) +
           f"  (audit tiers {sorted(audit)} excluded)")
     print("full totals: " + "  ".join(f"{r['value']:.1f}s" for r in runs))
+    print("failed: " + "  ".join(str(r.get("failed", [])) for r in runs))
     hdr = f"{'query':32s} {'min':>7s} {'median':>7s} {'mad':>6s}"
     if ref:
         hdr += f" {'ref':>7s} {'min/ref':>8s}"
@@ -70,7 +74,7 @@ def main():
     ref_sum = 0.0
     rows = []
     for q in queries:
-        ts = sorted(r["queries"][q] for r in runs)
+        ts = sorted(r["queries"][q] for r in runs if q in r["queries"])
         med = statistics.median(ts)
         mad = statistics.median(abs(t - med) for t in ts)
         row = (q, ts[0], med, mad)
