@@ -74,7 +74,7 @@ object Bench {
       */
     def render(withResources: Boolean): String = {
       def list(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-      // None (unpinned SF, or no pin file loaded) renders as null — an
+      // None (unpinned SF or core count, or no pin file) renders as null — an
       // empty LIST must always mean "checked and clean", never "unchecked"
       def nullable(xs: Option[Seq[String]]) = xs.map(list).getOrElse("null")
       def perQuery(f: Timing => String) =
@@ -192,15 +192,14 @@ object Bench {
         .map(_.name))
     }
     // shuffle-byte drift vs the committed pin (tools.BytePins): bytes
-    // are deterministic per (plan, data), so at a PINNED label a moved
-    // byte count is a plan event (e.g. an AQE join-strategy flip) even
-    // when the static fingerprint and wall clock are both silent.
-    val bytePins = BytePins.committed()
+    // are deterministic per (plan, data, cores), so at a label pinned
+    // for this core count a moved byte count is a plan event (e.g. an
+    // AQE join-strategy flip) even when the static fingerprint and wall
+    // clock are both silent; a core count without pins is unchecked.
     val curBytes = timings
       .map(t => t.name -> t.res.shuffleWriteBytes / (1024.0 * 1024.0)).toMap
-    val bytesDrift = lastSeg
-      .filter(l => bytePins.keys.exists(_._1 == l))
-      .map(l => BytePins.drift(bytePins, l, curBytes))
+    val bytesDrift = lastSeg.flatMap(l => BytePins.drift(BytePins.committed(),
+      l, spark.sparkContext.defaultParallelism, curBytes))
     Record(sfDir, timings, qs.map(_.name).filterNot(timed),
       qs.filter(_.auditTier).map(_.name), planDrift, bytesDrift)
   }

@@ -29,9 +29,8 @@ object Lakehouse {
     * key space: the lower HALF of the user range lands on existing
     * keys (updates + deletes), the upper half past the end (inserts) —
     * all three MERGE cases at every scale factor. Both inputs are
-    * 1-row scalar aggregates resolved driver-side (the
-    * [[graft.sources.Warehouse.upsertDim]] max-id-lookup precedent:
-    * a scalar over a dimension is not a corpus collect).
+    * 1-row scalar aggregates resolved driver-side (a scalar over a
+    * dimension is not a corpus collect).
     */
   def keyOffset(s: SparkSession, dir: String): Long = {
     // getAs boxes to null on an empty input — default 0 keeps the

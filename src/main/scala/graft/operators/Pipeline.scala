@@ -1,9 +1,10 @@
 package graft.operators
 
-import graft.functions.Keys
 import graft.functions.Nums._
 import graft.sources.{JsonLake, Warehouse}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,20 +17,24 @@ import org.apache.spark.sql.types._
   *
   * Reference mapping: celery DAG (/root/reference/celery_app) ordering
   * scrape -> transform (spark_pipeline/transform_job.py) -> skillner ->
-  * LLM enrich -> insert_to_postgres.py. Here every stage is a pure
+  * LLM enrich -> insert_to_postgres.py. Every stage is a pure
   * DataFrame -> DataFrame function, so the DAG is function composition
-  * and Catalyst optimizes ACROSS stage boundaries (e.g. the cleaning
-  * filter pushes into the JSON scan) — impossible in the reference's
-  * process-per-stage design.
+  * (e.g. the cleaning filter pushes into the JSON scan). Each load
+  * then materializes, once, the three frames that feed many writes —
+  * the enriched offers, their skill links and the numbered dims — at
+  * [[materializing]], so no write replays the scan, the dedup
+  * window or the numbering.
   *
   * The star load is defined once, here, for both loaders: the rebuild
   * ([[run]]) and the increment
   * ([[graft.streaming.StreamingPipeline.loadBatch]]) share the prefix
-  * ([[withOffers]]), the fact dims ([[factDims]]), the fact join and
-  * projection ([[facts]]) and the skill bridge ([[bridge]]). They differ
-  * only in where the dims come from — [[dim]] numbering here,
-  * [[Warehouse.upsertDim]] get-or-create there — and in overwriting
-  * versus appending. Differences kept on purpose (the benchmark's
+  * ([[withOffers]]), the seven get-or-create dims stacked in one frame
+  * ([[stackedDims]], [[dimTables]]) and numbered in one pass
+  * ([[Warehouse.numberDims]]), the fact join and projection ([[facts]])
+  * and the skill bridge ([[bridge]]). They differ only in where the
+  * numbering starts — from 1 here, after each stored dim's max id there
+  * ([[Warehouse.upsertDims]]) — and in overwriting versus appending.
+  * Differences kept on purpose (the benchmark's
   * ground truth pins each):
   *  - an offer without a parseable date: the rebuild leaves it out of
   *    the `ym`-partitioned `fact_offre`, an increment appends it with a
@@ -180,14 +185,14 @@ object Pipeline {
   /** A dim's natural key as both loaders store and join it. */
   private def naturalKey(natural: String): Column = lower(trim(col(natural)))
 
-  /** A get-or-create dimension as distinct + dense surrogate keys
-    * (two-phase Keys.denseIds — a global ROW_NUMBER window would move
-    * every distinct title/company through one task at scale).
+  /** A get-or-create dimension as distinct + dense surrogate keys: the
+    * one-dim case of the stacked numbering both loaders use
+    * ([[Warehouse.numberDims]]).
     */
   def dim(df: DataFrame, natural: String, idCol: String): DataFrame =
-    Keys.denseIds(df.select(naturalKey(natural).as("value")).distinct(),
-      Nil, Seq("value"), idCol)
-      .select("value", idCol)
+    Warehouse.numberDims(df.select(lit(idCol).as("dim"),
+      naturalKey(natural).as("value")).distinct(), Seq("value"), None)
+      .select(col("value"), col("id").as(idCol))
 
   /** One dimension `fact_offre` references: the offer column it is
     * keyed on, its table, and its surrogate id column.
@@ -208,15 +213,12 @@ object Pipeline {
 
   /** `offers` as `fact_offre` rows: each of [[factDims]] resolved to its
     * surrogate id by a broadcast join against `dims` (one frame per fact
-    * dim, in that order, each with `value` and the id column), then the
+    * dim, in that order, each exactly `value` and the id column), then the
     * fact projection — ids, the payload columns (schema.sql:78-80) and
     * the `ym` month key (null when the offer has no parseable date).
     */
   def facts(offers: DataFrame, dims: Seq[DataFrame]): DataFrame =
-    factDims.zip(dims).foldLeft(offers) { case (df, (d, dimDf)) =>
-      // (value, id) only: dim_compagnie's secteur would be ambiguous
-      // against the offer's own enriched secteur
-      val keys = dimDf.select("value", d.id)
+    factDims.zip(dims).foldLeft(offers) { case (df, (d, keys)) =>
       df.join(broadcast(keys), d.key === keys("value"))
     }.select(Seq(col("job_url"), col("pub_date")) ++
       factDims.map(d => col(d.id)) ++
@@ -230,6 +232,48 @@ object Pipeline {
   def bridge(links: DataFrame, dSkill: DataFrame): DataFrame =
     links.join(broadcast(dSkill), Seq("nom", "type_skill"))
       .select(col("job_url"), col("id_skill")).distinct()
+
+  /** The stacked value columns of a load's dims: a fact dim's key is
+    * its `value`, a skill's its (`value` = nom, `type_skill`). */
+  private[graft] val DimValueCols = Seq("value", "type_skill")
+
+  /** The seven get-or-create dims of one load stacked in one frame, one
+    * row per (dim, value, type_skill): the [[factDims]] over `offers`,
+    * then `dim_skill` over `links`. A company's `secteur`
+    * (schema.sql:36-41) is its min over its offers — a deterministic
+    * stand-in for the reference's first-insert-wins.
+    */
+  private[graft] def stackedDims(offers: DataFrame, links: DataFrame): DataFrame = {
+    val none = lit(null).cast(StringType)
+    factDims.map(d => offers.select(lit(d.table).as("dim"), d.key.as("value"),
+        none.as("type_skill"),
+        (if (d.table == "dim_compagnie") col("secteur") else none).as("secteur")))
+      .reduce(_ unionByName _)
+      .unionByName(links.select(lit("dim_skill").as("dim"),
+        col("nom").as("value"), col("type_skill"), none.as("secteur")))
+      .groupBy("dim", DimValueCols: _*).agg(min(col("secteur")).as("secteur"))
+  }
+
+  /** The tables of [[stackedDims]] under `outDir`, in its order. */
+  private[graft] def dimTables(outDir: String): Seq[Warehouse.DimTable] =
+    factDims.map(d => Warehouse.DimTable(d.table, s"$outDir/${d.table}",
+      Seq("value" -> "value", "id" -> d.id))) :+
+      Warehouse.DimTable("dim_skill", s"$outDir/dim_skill",
+        Seq("value" -> "nom", "type_skill" -> "type_skill", "id" -> "id_skill"))
+
+  /** The loaders' one materialization point: `keep(df)` inside `body`
+    * computes `df` once (an eager `localCheckpoint`, which also cuts its
+    * lineage, so later plans neither replay nor re-analyze it); every
+    * block `keep` made is released when `body` returns or throws.
+    */
+  private[graft] def materializing[T](body: (DataFrame => DataFrame) => T): T = {
+    val kept = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    try body { df =>
+      val cp = df.localCheckpoint()
+      kept ++= cp.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      cp
+    } finally kept.foreach(_.unpersist(blocking = false))
+  }
 
   /** The shared prefix of every load: quarantine the raw landing frame,
     * clean and enrich what survives, and hand `body` the offers and the
@@ -259,19 +303,18 @@ object Pipeline {
     */
   def run(s: SparkSession, lakePath: String, outDir: String): Result = {
     val raw = JsonLake.readJson(s, lakePath, offerSchema)
-    withOffers(raw) { (offers, bad) =>
-      val dims = factDims.map {
-        // dim_compagnie carries a secteur attribute (schema.sql:36-41);
-        // companies appearing under several sectors keep the min — a
-        // deterministic stand-in for the reference's first-insert-wins
-        case d if d.table == "dim_compagnie" =>
-          Keys.denseIds(
-            offers.select(d.key.as("value"), col("secteur"))
-              .groupBy("value").agg(min(col("secteur")).as("secteur")),
-            Nil, Seq("value"), d.id)
-            .select("value", "secteur", d.id)
-        case d => dim(offers, d.natural, d.id)
-      }
+    withOffers(raw)((cleaned, bad) => materializing { keep =>
+      val offers = keep(cleaned)
+      // skill dim is get-or-create over the UNION of payload + matched
+      // skills (insert_to_postgres.py get_or_create dim_skill semantics)
+      val links = keep(offerSkills(offers, SkillExtract.vocabDf(s)))
+      val ids = keep(Warehouse.numberDims(stackedDims(offers, links),
+        DimValueCols, None))
+      val tables = dimTables(outDir)
+      // a rebuild also writes dim_compagnie's secteur attribute
+      tables.map(t => if (t.dim != "dim_compagnie") t
+          else t.copy(cols = t.cols.patch(1, Seq("secteur" -> "secteur"), 0)))
+        .foreach(t => Warehouse.writeDim(t.rows(ids), t.path))
 
       // dim_date: calendar spine over the observed publication range
       // with the FULL attribute set of the reference's populate_calendar
@@ -295,30 +338,18 @@ object Pipeline {
           weekofyear(col("full_date")).as("week_of_year"),
           date_format(col("full_date"), "MMMM").as("month_name"),
           date_format(col("full_date"), "dd/MM/yyyy").as("date_str"))
-
-      // skill dim is get-or-create over the UNION of payload + matched
-      // skills (insert_to_postgres.py get_or_create dim_skill semantics)
-      val links = offerSkills(offers, SkillExtract.vocabDf(s))
-      val dSkill = Keys.denseIds(
-        links.select(col("nom"), col("type_skill")).distinct(),
-        Nil, Seq("nom", "type_skill"), "id_skill")
-        .select("nom", "type_skill", "id_skill")
-
-      factDims.zip(dims).foreach { case (d, dimDf) =>
-        Warehouse.writeDim(dimDf, s"$outDir/${d.table}")
-      }
       Warehouse.writeDim(dDate, s"$outDir/dim_date")
-      Warehouse.writeDim(dSkill, s"$outDir/dim_skill")
+
       Warehouse.writeFactPartitioned(
-        facts(offers, dims).filter(col("ym").isNotNull),
+        facts(offers, tables.init.map(_.rows(ids))).filter(col("ym").isNotNull),
         s"$outDir/fact_offre", "ym", "job_url")
-      bridge(links, dSkill)
+      bridge(links, tables.last.rows(ids))
         .write.mode("overwrite").parquet(s"$outDir/offre_skill")
       bad.write.mode("overwrite").json(s"$outDir/quarantine")
 
       Result(raw.count(), offers.count(), bad.count(),
         s.read.parquet(s"$outDir/fact_offre").count(),
         s.read.parquet(s"$outDir/offre_skill").count())
-    }
+    })
   }
 }

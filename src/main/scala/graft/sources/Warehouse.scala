@@ -80,32 +80,69 @@ object Warehouse {
     }
   }
 
-  /** Incremental get-or-create for a parquet dimension — the EXACT
-    * semantics of the reference's per-row `get_or_create`
-    * (insert_to_postgres.py:60-84) done set-based: existing values keep
-    * their ids forever; unseen values get fresh dense ids after the
-    * current max (sorted within the arriving batch — deterministic per
-    * batch, insertion-ordered across batches like the reference's
-    * serials). The max-id lookup is a scalar aggregate; id assignment
-    * is the two-phase [[graft.functions.Keys.denseIds]], so no global
-    * window appears even for high-cardinality dims.
-    *
-    * Returns the post-upsert dimension.
+  /** A table of a stacked get-or-create: its `dim` label, its path, and
+    * its columns as (stacked, table) names — values, then `id`.
     */
+  final case class DimTable(dim: String, path: String,
+      cols: Seq[(String, String)]) {
+    def read(s: SparkSession): Option[DataFrame] = readIfExists(s, path)
+      .map(_.select(lit(dim).as("dim") +:
+        cols.map { case (st, t) => col(t).as(st) }: _*))
+    /** This table's rows of the stacked `ids`, freshly aliased so that
+      * dims split from one frame can be joined in one plan. */
+    def rows(ids: DataFrame): DataFrame = ids.filter(col("dim") === dim)
+      .select(cols.map { case (st, t) => col(st).as(t) }: _*)
+  }
+
+  /** Get-or-create ids for dims stacked in one frame — the reference's
+    * per-row `get_or_create` (insert_to_postgres.py:60-84) done
+    * set-based, with ONE [[graft.functions.Keys.denseIds]] pass grouped
+    * by `dim`. `values` has one row per (dim, valueCols…) plus any
+    * attributes; `existing` holds the stored (dim, valueCols…, id). New
+    * values get ids in sorted order after their dim's max stored id, so
+    * each dim numbers as it would alone. Returns the stored rows and the
+    * new ones, the latter with `fresh` true.
+    */
+  def numberDims(values: DataFrame, valueCols: Seq[String],
+      existing: Option[DataFrame]): DataFrame = {
+    val novel = existing.fold(values)(e => values.join(e, ("dim" +: valueCols)
+      .map(c => values(c) <=> e(c)).reduce(_ && _), "left_anti"))
+    val ids = graft.functions.Keys.denseIds(novel, Seq("dim"), valueCols, "id")
+    val fresh = existing.fold(ids)(e => ids
+      .join(broadcast(e.groupBy("dim").agg(max(col("id")).as("__max"))),
+        Seq("dim"), "left")
+      .withColumn("id", (col("id") + coalesce(col("__max"), lit(0))).cast("int"))
+      .drop("__max")).withColumn("fresh", lit(true))
+    existing.fold(fresh)(_.withColumn("fresh", lit(false))
+      .unionByName(fresh, allowMissingColumns = true))
+  }
+
+  /** Incremental get-or-create for the parquet dims `tables`: each is
+    * read once, [[numberDims]] runs once (its result put through
+    * `keep`), and only the tables that gained values are appended, one
+    * file each (the first append creates a table). Returns the numbered
+    * frame.
+    */
+  def upsertDims(values: DataFrame, valueCols: Seq[String],
+      tables: Seq[DimTable], keep: DataFrame => DataFrame): DataFrame = {
+    val existing = tables.flatMap(_.read(values.sparkSession))
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+    val ids = keep(numberDims(values, valueCols, existing))
+    val added = ids.filter(col("fresh"))
+    val grown = added.select("dim").distinct().collect().map(_.getString(0)).toSet
+    tables.filter(t => grown(t.dim))
+      .foreach(t => t.rows(added).coalesce(1).write.mode(SaveMode.Append)
+        .parquet(t.path))
+    ids
+  }
+
+  /** [[upsertDims]] for one table of `values`' columns plus `idCol`.
+    * Returns the post-upsert dimension. */
   def upsertDim(values: DataFrame, path: String, idCol: String): DataFrame = {
-    val s = values.sparkSession
-    val valueCols = values.columns.toSeq
-    val incoming = values.distinct()
-    val existing = readIfExists(s, path)
-    val novel = existing.fold(incoming)(incoming.join(_, valueCols, "left_anti"))
-    // an absent or empty dim (a first batch whose lines were all
-    // corrupt writes one) numbers from 1; the append creates the path
-    val maxId = existing.fold(0)(
-      _.agg(coalesce(max(col(idCol)), lit(0))).head.getInt(0))
-    graft.functions.Keys.denseIds(novel, Nil, valueCols, idCol)
-      .withColumn(idCol, (col(idCol) + lit(maxId)).cast("int"))
-      .write.mode(SaveMode.Append).parquet(path)
-    s.read.parquet(path)
+    val cols = values.columns.toSeq
+    val t = DimTable(path, path, cols.map(c => c -> c) :+ ("id" -> idCol))
+    t.rows(upsertDims(values.select(lit(path).as("dim") +: cols.map(col): _*)
+      .distinct(), cols, Seq(t), identity))
   }
 
   /** Bloom-accelerated DEDUP-APPEND sink: append only rows whose key

@@ -8,12 +8,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The reference's INCREMENTAL load path as a stream: scraper JSON
   * lands in the lake, each micro-batch cleans + enriches and upserts
-  * the warehouse — dimensions via get-or-create ([[Warehouse.upsertDim]]
-  * — ids are stable across batches, exactly like the reference's
-  * Postgres serials), facts appended. The file source + checkpoint give
-  * exactly-once file processing, so re-running after a crash neither
-  * drops nor duplicates a scrape (the property the reference's
-  * Celery-retry + row-INSERT flow approximates with PK conflicts).
+  * the warehouse — dimensions via get-or-create
+  * ([[Warehouse.upsertDims]] — ids are stable across batches, exactly
+  * like the reference's Postgres serials), facts appended. The file
+  * source + checkpoint select each file for exactly one batch, but the
+  * `foreachBatch` sink is at-least-once: a batch that crashes after
+  * some of its appends is replayed with the same `batchId`, and
+  * [[loadBatch]] ignores that id, so a replay appends facts, bridge
+  * rows, `load_audit` and quarantine rows a second time (ROADMAP item
+  * 2; the JDBC and manifest sinks below are keyed by `batchId`).
   *
   * Batch `Pipeline.run` stays the rebuild path; this is the tailing
   * path a production lake runs continuously. Both load the one star
@@ -60,38 +63,39 @@ object StreamingPipeline {
   /** Load one micro-batch of raw offers into the warehouse: the full
     * star — six get-or-create dims, the skill dim + bridge, fact and
     * quarantine appends. Also the REBUILD path's incremental sibling:
-    * callable on any static frame for backfill chunks.
+    * callable on any static frame for backfill chunks. `batchId` is
+    * only recorded in `load_audit`: loading a batch twice appends it
+    * twice.
     *
     * Every batch is CONSTRAINT-GATED (the Deequ pattern,
-    * [[DataQuality.constraintSuite]]): the expectation report is always
-    * appended to `load_audit`; if any expectation fails, the batch is
-    * diverted to `rejected_batches` and the warehouse is NOT touched —
-    * fail the load, never publish a corrupt snapshot.
+    * [[DataQuality.constraintSuite]]): the expectation report, computed
+    * once, is always appended to `load_audit`; if any expectation fails,
+    * the batch is diverted to `rejected_batches` and the warehouse is
+    * NOT touched — fail the load, never publish a corrupt snapshot.
     */
   def loadBatch(batch: DataFrame, outDir: String, batchId: Long = -1L,
       checks: Seq[(String, org.apache.spark.sql.Column)] = offerChecks)
-      : Unit = Pipeline.withOffers(batch) { (offers, bad) =>
-    val gate = DataQuality.constraintSuite(offers, checks)
-      .withColumn("batch_id", lit(batchId))
-    gate.write.mode("append").parquet(s"$outDir/load_audit")
-    if (gate.filter(!col("passed")).limit(1).count() > 0)
-      offers.write.mode("append").parquet(s"$outDir/rejected_batches")
-    else {
-      val dims = Pipeline.factDims.map(d => Warehouse.upsertDim(
-        offers.select(d.key.as("value")),
-        s"$outDir/${d.table}", d.id))
-      Pipeline.facts(offers, dims)
-        .write.mode("append").parquet(s"$outDir/fact_offre")
-      val links = Pipeline.offerSkills(offers,
-        SkillExtract.vocabDf(batch.sparkSession))
-      val dSkill = Warehouse.upsertDim(
-        links.select(col("nom"), col("type_skill")),
-        s"$outDir/dim_skill", "id_skill")
-      Pipeline.bridge(links, dSkill)
-        .write.mode("append").parquet(s"$outDir/offre_skill")
-    }
-    bad.write.mode("append").json(s"$outDir/quarantine")
-  }
+      : Unit = Pipeline.withOffers(batch)((cleaned, bad) =>
+    Pipeline.materializing { keep =>
+      val offers = keep(cleaned)
+      val gate = keep(DataQuality.constraintSuite(offers, checks)
+        .withColumn("batch_id", lit(batchId)))
+      gate.write.mode("append").parquet(s"$outDir/load_audit")
+      if (!gate.filter(!col("passed")).isEmpty)
+        offers.write.mode("append").parquet(s"$outDir/rejected_batches")
+      else {
+        val links = keep(Pipeline.offerSkills(offers,
+          SkillExtract.vocabDf(batch.sparkSession)))
+        val tables = Pipeline.dimTables(outDir)
+        val ids = Warehouse.upsertDims(Pipeline.stackedDims(offers, links),
+          Pipeline.DimValueCols, tables, keep)
+        Pipeline.facts(offers, tables.init.map(_.rows(ids)))
+          .write.mode("append").parquet(s"$outDir/fact_offre")
+        Pipeline.bridge(links, tables.last.rows(ids))
+          .write.mode("append").parquet(s"$outDir/offre_skill")
+      }
+      bad.write.mode("append").json(s"$outDir/quarantine")
+    })
 
   /** Drain all currently-available lake files and stop. */
   def runOnce(s: SparkSession, lakeDir: String, outDir: String,

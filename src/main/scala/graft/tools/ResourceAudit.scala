@@ -106,15 +106,18 @@ object BytePins {
   def pinFile: java.io.File = new java.io.File(
     repoRoot, "src/test/resources/bench_bytes.txt")
 
-  /** (sf label, query) -> pinned shuffle_write_mb. Empty map = no pins
-    * (callers must render null/unchecked, never an empty clean list). */
-  def committed(): Map[(String, String), Double] = {
+  /** (sf label, cores, query) -> pinned shuffle_write_mb. Shuffle
+    * volumes depend on the partition count, which follows the session's
+    * cores, so each core count carries its own pin set. Empty map = no
+    * pins (callers must render null/unchecked, never an empty clean
+    * list). */
+  def committed(): Map[(String, Int, String), Double] = {
     val f = pinFile
     if (!f.exists()) Map.empty
     else scala.util.Using.resource(scala.io.Source.fromFile(f)) { src =>
       src.getLines().filter(_.nonEmpty).map { l =>
-        val Array(sf, n, mb) = l.split(" ")
-        (sf, n) -> mb.toDouble
+        val Array(sf, cores, n, mb) = l.split(" ")
+        (sf, cores.toInt, n) -> mb.toDouble
       }.toMap
     }
   }
@@ -124,16 +127,18 @@ object BytePins {
     * floored at 0.5 MB so a broadcast->shuffle flip from ~0 is caught
     * as a huge ratio, not a 0-division) leaves [0.7, 1.4] — the band
     * the round-13 findings calibrate: same-plan re-runs sit within a
-    * few percent, while the flagged events moved x8-x47.
+    * few percent, while the flagged events moved x8-x47. None — unchecked,
+    * never an empty clean list — when `label` has no pins for `cores`.
     */
-  def drift(pins: Map[(String, String), Double], label: String,
-      current: Map[String, Double]): Seq[String] =
-    current.toSeq.sortBy(_._1).flatMap { case (q, cur) =>
-      pins.get((label, q)).flatMap { pin =>
+  def drift(pins: Map[(String, Int, String), Double], label: String,
+      cores: Int, current: Map[String, Double]): Option[Seq[String]] =
+    if (!pins.keys.exists(k => k._1 == label && k._2 == cores)) None
+    else Some(current.toSeq.sortBy(_._1).flatMap { case (q, cur) =>
+      pins.get((label, cores, q)).flatMap { pin =>
         val ratio = math.max(cur, 0.5) / math.max(pin, 0.5)
         if (math.abs(cur - pin) > 1.0 && (ratio < 0.7 || ratio > 1.4))
           Some(q)
         else None
       }
-    }
+    })
 }

@@ -98,6 +98,7 @@ class IncrementalStreamingSpec extends AnyFunSuite {
     w2.println(offer("u3", "beta")); w2.println(offer("u4", "gamma"))
     w2.close()
     StreamingPipeline.runOnce(spark, lake, out, ckpt)
+    assertNoCacheLeft("runOnce")
     val dim2 = spark.read.parquet(s"$out/dim_source").collect()
       .map(r => r.getAs[String]("value") -> r.getAs[Int]("id_source")).toMap
     assert(dim2 === Map("alpha" -> 1, "beta" -> 2, "gamma" -> 3))
@@ -187,6 +188,71 @@ class IncrementalStreamingSpec extends AnyFunSuite {
     val dim = spark.read.parquet(s"$out/dim_source").collect()
       .map(r => r.getAs[String]("value") -> r.getAs[Int]("id_source")).toMap
     assert(dim === Map("alpha" -> 1))
+  }
+
+  /** Runs `load` and asserts it left no cached RDD behind. */
+  private def leavesNoCache(what: String)(load: => Unit): Unit = {
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    load
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cached).isEmpty,
+      s"$what left a cached RDD behind")
+  }
+
+  /** Land `lines` as the next scrape file of `lake` and load it. */
+  private def land(lake: String, out: String, ckpt: String, name: String)(
+      lines: String*): Unit = {
+    val w = new java.io.PrintWriter(s"$lake/$name.jsonl")
+    lines.foreach(w.println)
+    w.close()
+    leavesNoCache("runOnce")(StreamingPipeline.runOnce(spark, lake, out, ckpt))
+  }
+
+  private def ids(out: String, dim: String, key: String, id: String) =
+    spark.read.parquet(s"$out/$dim").collect()
+      .map(r => r.getAs[String](key) -> r.getAs[Int](id)).toMap
+
+  test("stacked get-or-create: one string in three dims gets each dim's own next id") {
+    val lake = Files.createTempDirectory("graft_sd_lake").toString
+    val out = Files.createTempDirectory("graft_sd_out").toString
+    val ckpt = Files.createTempDirectory("graft_sd_ckpt").toString
+    land(lake, out, ckpt, "b1")(offer("u1", "alpha"))
+    val skills1 = ids(out, "dim_skill", "nom", "id_skill")
+    assert(ids(out, "dim_source", "value", "id_source") === Map("alpha" -> 1))
+    assert(ids(out, "dim_contrat", "value", "id_contrat") === Map("cdi" -> 1))
+    // "stage" arrives as a source, a contract and a payload skill at once
+    land(lake, out, ckpt, "b2")(offer("u2", "stage")
+      .replace("\"CDI\"", "\"Stage\"")
+      .replace("}", ",\"skills\":{\"hard_skills\":[\"stage\"]}}"))
+    assert(ids(out, "dim_source", "value", "id_source") ===
+      Map("alpha" -> 1, "stage" -> 2))
+    assert(ids(out, "dim_contrat", "value", "id_contrat") ===
+      Map("cdi" -> 1, "stage" -> 2))
+    assert(ids(out, "dim_skill", "nom", "id_skill") ===
+      skills1 + ("stage" -> (skills1.values.max + 1)))
+    val u2 = spark.read.parquet(s"$out/fact_offre").filter(col("job_url") === "u2").head
+    assert(u2.getAs[Int]("id_source") === 2 && u2.getAs[Int]("id_contrat") === 2)
+    val u2Skills = spark.read.parquet(s"$out/offre_skill").filter(col("job_url") === "u2")
+      .collect().map(_.getAs[Int]("id_skill")).toSet
+    assert(u2Skills.contains(skills1.values.max + 1))
+  }
+
+  test("stacked get-or-create: new values in one dim append to that dim alone") {
+    val lake = Files.createTempDirectory("graft_one_lake").toString
+    val out = Files.createTempDirectory("graft_one_out").toString
+    val ckpt = Files.createTempDirectory("graft_one_ckpt").toString
+    land(lake, out, ckpt, "b1")(offer("u1", "alpha"))
+    val dims = Seq("dim_source", "dim_contrat", "dim_titre", "dim_compagnie",
+      "dim_niveau_etudes", "dim_niveau_experience", "dim_skill")
+    def files(d: String) = new java.io.File(s"$out/$d").list().toSet
+    val before = dims.map(d => d -> files(d)).toMap
+    land(lake, out, ckpt, "b2")(offer("u2", "gamma"), offer("u3", "beta"),
+      offer("u4", "alpha"))
+    dims.filterNot(_ == "dim_source").foreach(d =>
+      assert(files(d) === before(d), s"$d was appended to"))
+    assert(files("dim_source") !== before("dim_source"))
+    // the new values follow the dim's max id, in sorted order
+    assert(ids(out, "dim_source", "value", "id_source") ===
+      Map("alpha" -> 1, "beta" -> 2, "gamma" -> 3))
   }
 
   test("exactly-once JDBC publish: two micro-batches, a replay, and a partial-failure retry") {
@@ -301,7 +367,8 @@ class IncrementalStreamingSpec extends AnyFunSuite {
 
     // healthy batch: audit row per check, all passed, star published
     val okOut = Files.createTempDirectory("graft_gate_ok").toString
-    StreamingPipeline.loadBatch(batch, okOut, batchId = 7L)
+    leavesNoCache("a published loadBatch")(
+      StreamingPipeline.loadBatch(batch, okOut, batchId = 7L))
     val audit = spark.read.parquet(s"$okOut/load_audit").collect()
     assert(audit.length === 3)
     audit.foreach { r =>
@@ -312,8 +379,9 @@ class IncrementalStreamingSpec extends AnyFunSuite {
 
     // failing expectation: batch diverted, warehouse untouched
     val badOut = Files.createTempDirectory("graft_gate_bad").toString
-    StreamingPipeline.loadBatch(batch, badOut, batchId = 8L,
-      checks = Seq("no_rows_allowed" -> count(lit(1))))
+    leavesNoCache("a rejected loadBatch")(
+      StreamingPipeline.loadBatch(batch, badOut, batchId = 8L,
+        checks = Seq("no_rows_allowed" -> count(lit(1)))))
     assert(!spark.read.parquet(s"$badOut/load_audit").collect()
       .exists(_.getAs[Boolean]("passed")))
     assert(spark.read.parquet(s"$badOut/rejected_batches").count() === 2)

@@ -55,20 +55,33 @@ class ResourceAuditSpec extends AnyFunSuite {
 
   test("BytePins.drift flags flips and quadratic growth, tolerates noise") {
     val pins = Map(
-      ("sf0.1", "steady") -> 100.0,   // same-plan rerun: within band
-      ("sf0.1", "flip") -> 0.02,      // the q5 broadcast->SMJ shape
-      ("sf0.1", "blowup") -> 57.6,    // the uncapped-bucket shape
-      ("sf0.1", "tiny") -> 0.3,       // sub-MB noise must never flag
-      ("sf0.1", "gone") -> 411.0,     // a shuffle that vanished
-      ("sf1.0", "other_label") -> 5.0)
+      ("sf0.1", 32, "steady") -> 100.0,   // same-plan rerun: within band
+      ("sf0.1", 32, "flip") -> 0.02,      // the q5 broadcast->SMJ shape
+      ("sf0.1", 32, "blowup") -> 57.6,    // the uncapped-bucket shape
+      ("sf0.1", 32, "tiny") -> 0.3,       // sub-MB noise must never flag
+      ("sf0.1", 32, "gone") -> 411.0,     // a shuffle that vanished
+      ("sf1.0", 32, "other_label") -> 5.0,
+      ("sf0.1", 4, "other_cores") -> 5.0)
     val cur = Map(
       "steady" -> 104.0, "flip" -> 411.0, "blowup" -> 2743.0,
       "tiny" -> 0.8, "gone" -> 0.05, "unpinned_query" -> 999.0,
-      "other_label" -> 999.0) // pinned under a DIFFERENT label: ignored
-    assert(BytePins.drift(pins, "sf0.1", cur) ===
-      Seq("blowup", "flip", "gone"))
+      // pinned under a DIFFERENT label or core count: ignored
+      "other_label" -> 999.0, "other_cores" -> 999.0)
+    assert(BytePins.drift(pins, "sf0.1", 32, cur) ===
+      Some(Seq("blowup", "flip", "gone")))
     // clean run: everything within the band or below the noise floor
-    assert(BytePins.drift(pins, "sf0.1",
-      Map("steady" -> 100.5, "flip" -> 0.03, "tiny" -> 0.1)) === Seq.empty)
+    assert(BytePins.drift(pins, "sf0.1", 32,
+      Map("steady" -> 100.5, "flip" -> 0.03, "tiny" -> 0.1)) === Some(Seq.empty))
+  }
+
+  test("BytePins.drift: a core count without pins is unchecked, not clean") {
+    val pins = Map(("sf0.1", 32, "q") -> 10.0, ("sf0.1", 4, "q") -> 3.0)
+    assert(BytePins.drift(pins, "sf0.1", 4, Map("q" -> 3.1)) === Some(Seq.empty))
+    assert(BytePins.drift(pins, "sf0.1", 4, Map("q" -> 10.0)) === Some(Seq("q")))
+    assert(BytePins.drift(pins, "sf0.1", 8, Map("q" -> 10.0)) === None)
+    assert(BytePins.drift(pins, "sf1.0", 32, Map("q" -> 10.0)) === None)
+    // the committed file parses, and both sf0.1 core counts are pinned
+    val committed = BytePins.committed()
+    assert(Seq(4, 32).forall(c => committed.keys.exists(k => k._1 == "sf0.1" && k._2 == c)))
   }
 }

@@ -145,9 +145,10 @@ def main():
 
     # bytes-drift assertion (round 14): each Bench leg carries a
     # "bytes_drift" list — its live shuffle-write compared against the
-    # committed per-label pin (src/test/resources/bench_bytes.txt; rule
-    # in graft.tools.BytePins). Same contract as plan_drift: [] means
-    # checked-and-clean, null means the leg's SF label has no pins yet.
+    # committed per-(label, cores) pin (src/test/resources/bench_bytes.txt;
+    # rule in graft.tools.BytePins). Same contract as plan_drift: [] means
+    # checked-and-clean, null means the leg's SF label has no pins yet
+    # for the core count it ran on.
     # Any non-empty list is a PLAN EVENT (the q5 broadcast->SMJ flip
     # class) — adjudicate it, then re-pin with tools/pin_bytes.py. A
     # nonzero exit here makes the gate fail loudly instead of filing

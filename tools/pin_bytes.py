@@ -2,17 +2,21 @@
 """(Re)generate the shuffle-byte pin file from Bench logs.
 
 Usage:
-  tools/pin_bytes.py LABEL=BENCH_LOG [LABEL=BENCH_LOG ...]
+  tools/pin_bytes.py --cores N LABEL=BENCH_LOG [LABEL=BENCH_LOG ...]
 
-Each LABEL is the SF-dir last segment Bench will run under (sf0.1,
-sf1.0f32, sf3.0f32, sf1.0, sf3.0, ...); each BENCH_LOG is a file
-containing one Bench JSON line with a "resources" map. Pins for labels
-NOT named are carried over from the existing file (the fingerprint
-pin's carry rule), so a partial re-pin never silently drops coverage.
+N is the core count the logs were taken with (SPARK_GRAFT_CPUS, the
+session's local[N]): shuffle volumes follow the partition count, so
+each core count has its own pin set. Each LABEL is the SF-dir last
+segment Bench will run under (sf0.1, sf1.0f32, sf3.0f32, sf1.0,
+sf3.0, ...); each BENCH_LOG is a file containing one Bench JSON line
+with a "resources" map. Pins for (label, cores) pairs NOT named are
+carried over from the existing file (the fingerprint pin's carry
+rule), so a partial re-pin never silently drops coverage.
 
 The pin records each headliner's shuffle_write_mb; Bench compares its
-live numbers against the pin for its SF label and emits `bytes_drift`
-(see graft.tools.BytePins for the drift rule). Re-pin whenever a
+live numbers against the pin for its SF label and core count and emits
+`bytes_drift`, or null when that core count has no pins (see
+graft.tools.BytePins for the drift rule). Re-pin whenever a
 deliberate plan change moves bytes — the same discipline as
 PlanFingerprint regeneration.
 """
@@ -36,28 +40,30 @@ def load_log(p):
 
 
 def main():
-    if len(sys.argv) < 2:
+    args = sys.argv[1:]
+    if len(args) < 3 or args[0] != "--cores" or not args[1].isdigit():
         sys.exit(__doc__)
+    cores = int(args[1])
     new = {}
-    for a in sys.argv[1:]:
+    for a in args[2:]:
         label, _, path = a.partition("=")
         if not path:
             sys.exit(f"bad arg (want LABEL=LOG): {a}")
         for q, mb in load_log(path).items():
-            new[(label, q)] = mb
+            new[(label, cores, q)] = mb
     carried = 0
     if os.path.exists(PIN):
-        fresh_labels = {l for (l, _) in new}
+        fresh = {(l, c) for (l, c, _) in new}
         for line in open(PIN):
             if not line.strip():
                 continue
-            l, q, mb = line.split()
-            if l not in fresh_labels:
-                new[(l, q)] = float(mb)
+            l, c, q, mb = line.split()
+            if (l, int(c)) not in fresh:
+                new[(l, int(c), q)] = float(mb)
                 carried += 1
     with open(PIN, "w") as f:
-        for (l, q), mb in sorted(new.items()):
-            f.write(f"{l} {q} {mb:.2f}\n")
+        for (l, c, q), mb in sorted(new.items()):
+            f.write(f"{l} {c} {q} {mb:.2f}\n")
     print(f"wrote {len(new)} byte pins ({carried} carried) to {PIN}")
 
 

@@ -106,7 +106,8 @@ fi
 # exponents.py also asserts every leg's bytes_drift list is empty (the
 # shuffle-byte twin of plan_drift — see graft.tools.BytePins) and exits
 # nonzero on an alarm, which fails the gate AFTER the table is written:
-# adjudicate the flagged queries, re-pin with tools/pin_bytes.py, rerun.
+# adjudicate the flagged queries, re-pin with tools/pin_bytes.py --cores
+# "$CPUS", rerun.
 P30="-"; F30="-"
 [ "$SF3" = 1 ] && P30="$GATE_OUT/bench_sf3.0f32.log" && F30="$GATE_OUT/bench_sf3.0.log"
 GATE_RC=0
