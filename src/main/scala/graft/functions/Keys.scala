@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   *      so the prefix-sum is a broadcast self-join on that tiny frame,
   *      not a global window.
   *
-  * Mirrors the reference's get-or-create serials
-  * (/root/reference/spark_pipeline/insert_to_postgres.py:60-84) with a
-  * deterministic sorted numbering instead of insertion order.
+  * Kept for groups with no size bound: registered keys and SCD2 dims
+  * ([[graft.sources.Warehouse.upsertDimScd2]]). The loaders' dims, each
+  * broadcast whole, rank in one task ([[graft.sources.Warehouse.numberDims]]).
   */
 object Keys {
 

@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions.Nums._
 import graft.sources.{JsonLake, Warehouse}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,8 +28,8 @@ import org.apache.spark.sql.types._
   * The star load is defined once, here, for both loaders: the rebuild
   * ([[run]]) and the increment
   * ([[graft.streaming.StreamingPipeline.loadBatch]]) share the prefix
-  * ([[withOffers]]), the seven get-or-create dims stacked in one frame
-  * ([[stackedDims]], [[dimTables]]) and numbered in one pass
+  * ([[withOffers]]), the seven get-or-create dims' rows stacked in one
+  * frame ([[stackedDims]], [[dimTables]]) and numbered in one exchange
   * ([[Warehouse.numberDims]]), the fact join and projection ([[facts]])
   * and the skill bridge ([[bridge]]). They differ only in where the
   * numbering starts — from 1 here, after each stored dim's max id there
@@ -190,9 +190,8 @@ object Pipeline {
     * ([[Warehouse.numberDims]]).
     */
   def dim(df: DataFrame, natural: String, idCol: String): DataFrame =
-    Warehouse.numberDims(df.select(lit(idCol).as("dim"),
-      naturalKey(natural).as("value")).distinct(), Seq("value"), None)
-      .select(col("value"), col("id").as(idCol))
+    Warehouse.numberDims(df.select(lit(idCol).as("dim"), naturalKey(natural).as("value")),
+      Seq("value"), None).select(col("value"), col("id").as(idCol))
 
   /** One dimension `fact_offre` references: the offer column it is
     * keyed on, its table, and its surrogate id column.
@@ -237,11 +236,11 @@ object Pipeline {
     * its `value`, a skill's its (`value` = nom, `type_skill`). */
   private[graft] val DimValueCols = Seq("value", "type_skill")
 
-  /** The seven get-or-create dims of one load stacked in one frame, one
-    * row per (dim, value, type_skill): the [[factDims]] over `offers`,
-    * then `dim_skill` over `links`. A company's `secteur`
-    * (schema.sql:36-41) is its min over its offers — a deterministic
-    * stand-in for the reference's first-insert-wins.
+  /** The rows of the seven get-or-create dims of one load, stacked and
+    * NOT deduplicated: the [[factDims]] over `offers`, then `dim_skill`
+    * over `links`. [[Warehouse.numberDims]] groups them and takes a
+    * company's `secteur` (schema.sql:36-41) as its min over its offers —
+    * a deterministic stand-in for the reference's first-insert-wins.
     */
   private[graft] def stackedDims(offers: DataFrame, links: DataFrame): DataFrame = {
     val none = lit(null).cast(StringType)
@@ -251,7 +250,6 @@ object Pipeline {
       .reduce(_ unionByName _)
       .unionByName(links.select(lit("dim_skill").as("dim"),
         col("nom").as("value"), col("type_skill"), none.as("secteur")))
-      .groupBy("dim", DimValueCols: _*).agg(min(col("secteur")).as("secteur"))
   }
 
   /** The tables of [[stackedDims]] under `outDir`, in its order. */
@@ -340,16 +338,18 @@ object Pipeline {
           date_format(col("full_date"), "dd/MM/yyyy").as("date_str"))
       Warehouse.writeDim(dDate, s"$outDir/dim_date")
 
-      Warehouse.writeFactPartitioned(
-        facts(offers, tables.init.map(_.rows(ids))).filter(col("ym").isNotNull),
+      val written = Seq("fact_offre", "offre_skill").map(Observation(_))
+      Warehouse.writeFactPartitioned(facts(offers, tables.init.map(_.rows(ids)))
+        .filter(col("ym").isNotNull).observe(written(0), count(lit(1)).as("n")),
         s"$outDir/fact_offre", "ym", "job_url")
-      bridge(links, tables.last.rows(ids))
+      bridge(links, tables.last.rows(ids)).observe(written(1), count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(s"$outDir/offre_skill")
       bad.write.mode("overwrite").json(s"$outDir/quarantine")
 
-      Result(raw.count(), offers.count(), bad.count(),
-        s.read.parquet(s"$outDir/fact_offre").count(),
-        s.read.parquet(s"$outDir/offre_skill").count())
+      val lake = raw.agg(count(lit(1)), count(col(JsonLake.CorruptCol))).head
+      // AQE drops the observation of a plan it found empty: no row written
+      val Seq(nFacts, nLinks) = written.map(_.get.getOrElse("n", 0L).asInstanceOf[Long])
+      Result(lake.getLong(0), offers.count(), lake.getLong(1), nFacts, nLinks)
     })
   }
 }

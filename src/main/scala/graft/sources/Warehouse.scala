@@ -5,6 +5,7 @@ import java.util.Properties
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Warehouse sink — the reference loads its star schema into Postgres
@@ -95,26 +96,27 @@ object Warehouse {
   }
 
   /** Get-or-create ids for dims stacked in one frame — the reference's
-    * per-row `get_or_create` (insert_to_postgres.py:60-84) done
-    * set-based, with ONE [[graft.functions.Keys.denseIds]] pass grouped
-    * by `dim`. `values` has one row per (dim, valueCols…) plus any
-    * attributes; `existing` holds the stored (dim, valueCols…, id). New
-    * values get ids in sorted order after their dim's max stored id, so
-    * each dim numbers as it would alone. Returns the stored rows and the
-    * new ones, the latter with `fresh` true.
-    */
+    * per-row `get_or_create` (insert_to_postgres.py:60-84) set-based, in
+    * ONE exchange by `dim`: the load's `values` (duplicates allowed) are
+    * grouped with the stored (dim, valueCols…, id). A stored value keeps
+    * its id; new ones are numbered in sorted order after their dim's max
+    * id and take each attribute's min over their rows. Returns one row per
+    * value, new ones with `fresh` true. ONE task numbers each dim: the
+    * loaders broadcast every dim whole (`Pipeline.facts`, `bridge`), so a
+    * dim too large for one task fails loudly in that broadcast first. */
   def numberDims(values: DataFrame, valueCols: Seq[String],
       existing: Option[DataFrame]): DataFrame = {
-    val novel = existing.fold(values)(e => values.join(e, ("dim" +: valueCols)
-      .map(c => values(c) <=> e(c)).reduce(_ && _), "left_anti"))
-    val ids = graft.functions.Keys.denseIds(novel, Seq("dim"), valueCols, "id")
-    val fresh = existing.fold(ids)(e => ids
-      .join(broadcast(e.groupBy("dim").agg(max(col("id")).as("__max"))),
-        Seq("dim"), "left")
-      .withColumn("id", (col("id") + coalesce(col("__max"), lit(0))).cast("int"))
-      .drop("__max")).withColumn("fresh", lit(true))
-    existing.fold(fresh)(_.withColumn("fresh", lit(false))
-      .unionByName(fresh, allowMissingColumns = true))
+    val loaded = values.withColumn("id", lit(null).cast("int"))
+    val stored = max(col("id"))
+    val grouped = existing.fold(loaded)(_.unionByName(loaded, allowMissingColumns = true))
+      .repartition(col("dim")).groupBy("dim", valueCols: _*)
+      .agg(stored.as("id"), values.columns.diff("dim" +: valueCols).toSeq
+        .map(a => when(stored.isNull, min(col(a))).as(a)): _*)
+      .withColumn("fresh", col("id").isNull)
+    val rank = row_number().over(Window.partitionBy(col("dim"), col("fresh"))
+      .orderBy(valueCols.map(col): _*))
+    grouped.withColumn("id", coalesce(col("id"),
+      coalesce(max(col("id")).over(Window.partitionBy("dim")), lit(0)) + rank))
   }
 
   /** Incremental get-or-create for the parquet dims `tables`: each is
@@ -129,10 +131,9 @@ object Warehouse {
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
     val ids = keep(numberDims(values, valueCols, existing))
     val added = ids.filter(col("fresh"))
-    val grown = added.select("dim").distinct().collect().map(_.getString(0)).toSet
-    tables.filter(t => grown(t.dim))
-      .foreach(t => t.rows(added).coalesce(1).write.mode(SaveMode.Append)
-        .parquet(t.path))
+    val grown = added.select("dim").collect().map(_.getString(0)).toSet
+    tables.filter(t => grown(t.dim)).foreach(t =>
+      t.rows(added).coalesce(1).write.mode(SaveMode.Append).parquet(t.path))
     ids
   }
 
@@ -141,8 +142,7 @@ object Warehouse {
   def upsertDim(values: DataFrame, path: String, idCol: String): DataFrame = {
     val cols = values.columns.toSeq
     val t = DimTable(path, path, cols.map(c => c -> c) :+ ("id" -> idCol))
-    t.rows(upsertDims(values.select(lit(path).as("dim") +: cols.map(col): _*)
-      .distinct(), cols, Seq(t), identity))
+    t.rows(upsertDims(values.withColumn("dim", lit(path)), cols, Seq(t), identity))
   }
 
   /** Bloom-accelerated DEDUP-APPEND sink: append only rows whose key

@@ -271,6 +271,55 @@ class LakeWarehouseSpec extends AnyFunSuite {
     assert(files() === before, "a failed read must not rewrite the dim")
   }
 
+  test("numberDims: stored ids kept, new values ranked after each dim's max, rows grouped") {
+    import spark.implicits._
+    val stored = Seq[(String, String, Option[String], Int)](
+      ("dim_a", "x", None, 1), ("dim_a", "z", None, 2),
+      ("dim_skill", "spark", Some("hard"), 5),
+      ("dim_skill", "spark", Some("soft"), 6))
+      .toDF("dim", "value", "type_skill", "id")
+    val values = Seq[(String, String, Option[String], Option[String])](
+      ("dim_a", "x", None, Some("S1")), // stored and new
+      ("dim_a", "b", None, Some("S3")), ("dim_a", "b", None, Some("S2")),
+      ("dim_a", "b", None, Some("S2")), ("dim_a", "y", None, None),
+      ("dim_new", "q", None, None), ("dim_new", "p", None, None),
+      ("dim_skill", "python", None, None), ("dim_skill", "python", None, None),
+      ("dim_skill", "python", Some("hard"), None),
+      ("dim_skill", "spark", Some("hard"), None))
+      .toDF("dim", "value", "type_skill", "secteur")
+    val got = Warehouse.numberDims(values, Seq("value", "type_skill"), Some(stored))
+      .select("dim", "value", "type_skill", "secteur", "id", "fresh")
+    stored.createOrReplaceTempView("nd_stored")
+    values.createOrReplaceTempView("nd_values")
+    val oracle = spark.sql("""
+      SELECT dim, value, type_skill, CAST(NULL AS STRING) AS secteur, id,
+        false AS fresh FROM nd_stored
+      UNION ALL
+      SELECT n.dim, value, type_skill, secteur, CAST(COALESCE(m.mx, 0) +
+        ROW_NUMBER() OVER (PARTITION BY n.dim ORDER BY value, type_skill)
+        AS INT) AS id, true AS fresh
+      FROM (SELECT dim, value, type_skill, MIN(secteur) AS secteur
+            FROM nd_values v WHERE NOT EXISTS (SELECT 1 FROM nd_stored s
+              WHERE s.dim = v.dim AND s.value <=> v.value
+                AND s.type_skill <=> v.type_skill)
+            GROUP BY dim, value, type_skill) n
+      LEFT JOIN (SELECT dim, MAX(id) AS mx FROM nd_stored GROUP BY dim) m
+        ON n.dim = m.dim""")
+    assert(got.exceptAll(oracle).isEmpty && oracle.exceptAll(got).isEmpty)
+    val byKey = got.collect().map(r => (r.getString(0), r.getString(1),
+      Option(r.getString(2))) -> r).toMap
+    def at(d: String, v: String, t: Option[String] = None) = byKey((d, v, t))
+    assert(got.count() === 10, "one row per (dim, value, type_skill)")
+    assert(at("dim_a", "x").getInt(4) === 1 && !at("dim_a", "x").getBoolean(5))
+    assert(at("dim_a", "x").isNullAt(3), "a stored row carries no attribute")
+    assert(at("dim_a", "b").getInt(4) === 3 && at("dim_a", "b").getString(3) === "S2")
+    assert(at("dim_a", "y").getInt(4) === 4)
+    assert(at("dim_new", "p").getInt(4) === 1 && at("dim_new", "q").getInt(4) === 2)
+    assert(at("dim_skill", "python").getInt(4) === 7)
+    assert(at("dim_skill", "python", Some("hard")).getInt(4) === 8)
+    assert(at("dim_skill", "spark", Some("hard")).getInt(4) === 5)
+  }
+
   test("dedupAppend: bloom-routed exactly-once keys across three batches") {
     import spark.implicits._
     val store = Files.createTempDirectory("dedup_store").toString + "/docs"

@@ -15,10 +15,14 @@ prints a progress line on stderr. At the end, for each end-to-end metric
 of the change's BENCHMARK.json, it prints each side's median and
 quartiles, the change's median as a ratio to the parent's, the parent's
 quartile spread, and the fraction of pairs the change won (ties count
-for neither side); then `fail_frac` per side and one JSON line holding
-every sample. A gain is claimed only when the change wins at least nine
-tenths of the pairs and the medians differ by more than the parent's
-quartile spread.
+for neither side); then `fail_frac` per side, each side's median host
+steal, and one JSON line holding every sample. Each run's
+`host_steal_pct` (from run.py's `env` line: the share of the host's CPU
+time the hypervisor took during the run) is shown beside its metrics,
+and a pair where either side's steal is above STEAL_PCT is marked, since
+its timings say more about the host than about the code. A gain is
+claimed only when the change wins at least nine tenths of the pairs and
+the medians differ by more than the parent's quartile spread.
 
 Nothing under either checkout's perfbench/ is changed: each run builds
 and writes only what run.py itself writes there (.build, .cache, .work).
@@ -30,6 +34,10 @@ import statistics
 import subprocess
 import sys
 
+# Host steal (percent of CPU time) above which a pair's timings are
+# marked as disturbed by the host.
+STEAL_PCT = 2.0
+
 
 def quartiles(xs):
     xs = sorted(xs)
@@ -40,7 +48,8 @@ def quartiles(xs):
 
 
 def run_once(checkout, workload, seed):
-    """One benchmark run; returns ({metric: value}, ok)."""
+    """One benchmark run; returns ({metric: value}, host steal % or None,
+    ok)."""
     cmd = [sys.executable, os.path.join(checkout, "perfbench", "run.py"),
            "--workload", workload, "--seed", str(seed), "--seconds", "8",
            "--trace", "0"]
@@ -48,7 +57,14 @@ def run_once(checkout, workload, seed):
                        stderr=subprocess.PIPE, text=True,
                        stdin=subprocess.DEVNULL)
     metrics = {}
+    steal = None
     for line in p.stdout.splitlines():
+        if line.startswith("env "):
+            try:
+                steal = json.loads(line[4:]).get("host_steal_pct")
+            except ValueError:
+                pass
+            continue
         parts = line.split()
         if len(parts) == 4 and parts[0] == "metric":
             try:
@@ -57,7 +73,7 @@ def run_once(checkout, workload, seed):
                 pass
     if p.returncode != 0:
         sys.stderr.write(p.stderr[-2000:])
-    return metrics, p.returncode == 0
+    return metrics, steal, p.returncode == 0
 
 
 def end_to_end(checkout):
@@ -79,11 +95,11 @@ def main():
     for i in range(args.pairs):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            m, ok = run_once(sides[side], args.workload, args.seed)
-            runs[side].append({"metrics": m, "ok": ok})
+            m, steal, ok = run_once(sides[side], args.workload, args.seed)
+            runs[side].append({"metrics": m, "steal": steal, "ok": ok})
             shown = " ".join(f"{k}={m[k]:.4g}" for k in sorted(m))
             print(f"pair {i + 1}/{args.pairs} {side}: "
-                  f"{'ok' if ok else 'FAILED'} {shown}",
+                  f"{'ok' if ok else 'FAILED'} steal={steal}% {shown}",
                   file=sys.stderr, flush=True)
 
     print(f"workload {args.workload}, seed {args.seed}, {args.pairs} pairs "
@@ -108,7 +124,16 @@ def main():
     for side in ("parent", "change"):
         fr = [r["metrics"].get("fail_frac") for r in runs[side]]
         failed = sum(1 for r in runs[side] if not r["ok"])
-        print(f"{side}: fail_frac {fr}  runs failed {failed}/{len(fr)}")
+        steals = [r["steal"] for r in runs[side] if r["steal"] is not None]
+        med = f"{statistics.median(steals):.1f}%" if steals else "unknown"
+        print(f"{side}: fail_frac {fr}  runs failed {failed}/{len(fr)}  "
+              f"median host steal {med}")
+    for i, (p, c) in enumerate(zip(runs["parent"], runs["change"])):
+        high = [s for s in (p["steal"], c["steal"])
+                if s is not None and s > STEAL_PCT]
+        mark = f"  HOST STEAL > {STEAL_PCT:g}%" if high else ""
+        print(f"pair {i + 1}: steal parent {p['steal']}% change "
+              f"{c['steal']}%{mark}")
     print(json.dumps({"workload": args.workload, "seed": args.seed,
                       "pairs": args.pairs, "runs": runs}))
 
