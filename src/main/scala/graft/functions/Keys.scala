@@ -1,10 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Scale-safe dense surrogate-key assignment.
+/** Two distributed building blocks that replace a global window:
+  * [[Keys.denseIds]] (dense surrogate keys) and [[Keys.prefixSums]]
+  * (running sums, the spine of the rank statistics).
   *
   * The naive form — `row_number().over(Window.orderBy(value))` — moves
   * EVERY distinct value through one task ("No Partition Defined for
@@ -69,5 +71,38 @@ object Keys {
     local.join(broadcast(offs), groupCols :+ "__pid")
       .withColumn(idCol, (col("__off") + col("__rn")).cast("int"))
       .drop("__pid", "__rn", "__off")
+  }
+
+  /** Running sums of each BIGINT `measures` column along `order` within
+    * each `groups` tuple — `SUM(m) OVER (PARTITION BY groups ORDER BY
+    * order ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)` — added as
+    * `cum_<m>`, without a window over a whole group. A running count of
+    * `lit(1L)` under a total order is `row_number`.
+    *
+    * Two phases, like [[denseIds]]: a window per (groups, bucket), plus
+    * each bucket's offset — the totals of the group's lower buckets —
+    * from an aggregates-only self-join of the per-bucket totals,
+    * broadcast back. The caller keeps one condition: `bucket` never
+    * decreases along `order` within a group. A bucket that scales with
+    * the value range, not the row count, keeps the self-join tiny.
+    */
+  def prefixSums(df: DataFrame, groups: Seq[String], bucket: Column,
+      order: Seq[Column], measures: Seq[String]): DataFrame = {
+    val keys = groups :+ "__bk"
+    val bucketed = df.withColumn("__bk", bucket)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val totals = measures.map(m => sum(col(m)).as(s"__t_$m"))
+    val bt = bucketed.groupBy(keys.map(col): _*).agg(totals.head, totals.tail: _*)
+    val lower = groups.foldRight(col("y.__bk") < col("x.__bk"))((g, c) =>
+      col(s"y.$g") === col(s"x.$g") && c)
+    val offs = measures.map(m =>
+      coalesce(sum(col(s"y.__t_$m")), lit(0L)).as(s"__off_$m"))
+    val off = bt.as("x").join(bt.as("y"), lower, "left")
+      .groupBy(keys.map(k => col(s"x.$k").as(k)): _*).agg(offs.head, offs.tail: _*)
+    measures.foldLeft(bucketed)((d, m) => d.withColumn(s"__cw_$m", sum(col(m)).over(w)))
+      .join(broadcast(off), keys)
+      .select(df.columns.map(col) ++ measures.map(m =>
+        (col(s"__cw_$m") + col(s"__off_$m")).as(s"cum_$m")): _*)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Q
+import graft.functions.Keys
 import graft.functions.Text._
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -848,11 +849,9 @@ object Curation {
     * whether two scrape feeds even produce the same SHAPE of document,
     * the first thing that silently changes when a site redesigns).
     * D = max over the union value grid of |F_a − F_b|, evaluated
-    * exactly: per-source step CDFs on the shared n_chars grid via a
-    * SOURCE-PARTITIONED two-phase prefix sum (the
-    * [[graft.operators.Inference.cumCounts]] discipline, generalized to
-    * a partition key: per-(source, length-bucket) windows + an
-    * aggregates-only bucket-offset self-join — LINEAR in grid size, vs
+    * exactly: per-source step CDFs on the shared n_chars grid via
+    * [[graft.functions.Keys.prefixSums]] grouped by source over
+    * [[KsLenBucket]] buckets — LINEAR in grid size, vs
     * the ≤-join formulation whose each grid row rescans all of its
     * source's cells, O(values²) per source once distinct doc lengths
     * reach 1e5-1e6), then the max of |ca·nb − cb·na| in exact BIGINTs,
@@ -876,22 +875,9 @@ object Curation {
       .join(cells, Seq("source", "v"), "left")
       .select(col("source"), col("v"),
         coalesce(col("c"), lit(0L)).as("c0"))
-    // phase 1: running sum inside each (source, length-bucket) window;
-    // phase 2: add the bucket offset (sum of all LOWER buckets of the
-    // same source) from an aggregates-only self-join, broadcast back
-    val bucketed = grid0.withColumn("bk", expr(s"v div $KsLenBucket"))
-    val w = Window.partitionBy(col("source"), col("bk")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bt = bucketed.groupBy("source", "bk").agg(sum(col("c0")).as("t"))
-    val off = bt.as("x")
-      .join(bt.as("y"), col("y.source") === col("x.source")
-        && col("y.bk") < col("x.bk"), "left")
-      .groupBy(col("x.source").as("source"), col("x.bk").as("bk"))
-      .agg(coalesce(sum(col("y.t")), lit(0L)).as("off"))
-    val grid = bucketed
-      .withColumn("cw", sum(col("c0")).over(w))
-      .join(broadcast(off), Seq("source", "bk"))
-      .select(col("source"), col("v"), (col("cw") + col("off")).as("cum"))
+    val grid = Keys.prefixSums(grid0, Seq("source"), expr(s"v div $KsLenBucket"),
+        Seq(col("v")), Seq("c0"))
+      .select(col("source"), col("v"), col("cum_c0").as("cum"))
     val tots = cells.groupBy("source").agg(sum(col("c")).as("n"))
     val g = grid.join(broadcast(tots), Seq("source"))
     // cross-products in DECIMAL(38,0)/HUGEINT: cum·n passes BIGINT once

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Q
+import graft.functions.Keys
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -500,33 +501,19 @@ object Inference {
     * count, so the offsets self-join stays tiny at any corpus size. */
   val RankBucket = 5000L
 
+  /** The [[RankBucket]]-wide price bucket of `v`. */
+  private val rankBucket: Column = expr(s"CAST(v AS BIGINT) div $RankBucket")
+
   /** Distinct-value frame with exact cumulative counts per cohort —
     * shared spine of the rank statistics ([[ksTest]],
     * [[mannWhitneyU]]). Input: (v double, a, b) counts per distinct
-    * value. Output adds (ca, cb) = cohort counts over values <= v,
-    * built with the two-phase pattern (per-bucket partitioned window +
-    * bucket offsets from an aggregates-only self-join — the
-    * cumulative_users shape, no global window).
+    * value. Output adds (ca, cb) = cohort counts over values <= v
+    * ([[graft.functions.Keys.prefixSums]] over [[RankBucket]] buckets).
     */
-  def cumCounts(vals: DataFrame): DataFrame = {
-    val bucketed = vals.withColumn("bk", expr(s"CAST(v AS BIGINT) div $RankBucket"))
-    val w = Window.partitionBy(col("bk")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bt = bucketed.groupBy("bk")
-      .agg(sum(col("a")).as("ta"), sum(col("b")).as("tb"))
-    val off = bt.as("x")
-      .join(bt.as("y"), col("y.bk") < col("x.bk"), "left")
-      .groupBy(col("x.bk").as("bk"))
-      .agg(coalesce(sum(col("y.ta")), lit(0L)).as("offa"),
-        coalesce(sum(col("y.tb")), lit(0L)).as("offb"))
-    bucketed
-      .withColumn("cwa", sum(col("a")).over(w))
-      .withColumn("cwb", sum(col("b")).over(w))
-      .join(broadcast(off), Seq("bk"))
-      .select(col("v"), col("a"), col("b"),
-        (col("cwa") + col("offa")).as("ca"),
-        (col("cwb") + col("offb")).as("cb"))
-  }
+  def cumCounts(vals: DataFrame): DataFrame =
+    Keys.prefixSums(vals, Nil, rankBucket, Seq(col("v")), Seq("a", "b"))
+      .select(col("v"), col("a"), col("b"), col("cum_a").as("ca"),
+        col("cum_b").as("cb"))
 
   /** Per-distinct-value cohort counts of o_totalprice for the two
     * priority cohorts (the rank tests' shared input). */
@@ -706,68 +693,6 @@ object Inference {
                 CAST(u2a AS DOUBLE)
                   / CAST(CAST(CAST(na AS HUGEINT) * nb AS VARCHAR)
                          AS DOUBLE) - 1.0 END AS delta
-       FROM agg"""
-
-  /** Two-sample Cramér–von Mises statistic for the [[ksTest]] cohorts
-    * — the INTEGRATED distribution-gap test next to KS's single
-    * worst-point D (KS sees one sharp divergence; CvM sees a small gap
-    * that persists across the whole price range, the shape drift KS
-    * under-weights): T = n_a·n_b/N² · Σ over pooled observations of
-    * (F_a − F_b)², which over grouped counts is the EXACT integer
-    * S = Σ_v (a_v+b_v)·(ca·nb − cb·na)² divided once by N²·n_a·n_b
-    * (N = n_a+n_b). S accumulates in DECIMAL(38,0)/HUGEINT — exact to
-    * cohort sizes ~3·10⁹ per side, the [[ksSourceMatrix]] widening rule
-    * — and the division is one double over exact casts, so the value
-    * cannot be float-order-perturbed. Rides [[cumCounts]]'s two-phase
-    * prefix sums: the scan aggregates to distinct prices first and
-    * everything downstream is |distinct values|-sized. An empty cohort
-    * leaves T undefined — NULL (§7b rule). (round 8)
-    */
-  def cvmTest(s: SparkSession, dir: String): DataFrame =
-    cvmFrom(priceCohorts(s, dir))
-
-  /** Core over any per-distinct-value cohort frame (v, a, b). */
-  private[graft] def cvmFrom(vals: DataFrame): DataFrame = {
-    val cc = cumCounts(vals)
-    val tot = vals.agg(sum(col("a")).as("na"), sum(col("b")).as("nb"))
-    cc.crossJoin(broadcast(tot))
-      .select(col("na"), col("nb"),
-        // d = ca·nb − cb·na stays BIGINT to ~3e9-per-cohort (the ks_test
-        // bound); the square widens through DECIMAL(38,0)
-        ((col("a") + col("b"))
-          * ((col("ca") * col("nb") - col("cb") * col("na"))
-            .cast("decimal(38,0)")
-            * (col("ca") * col("nb") - col("cb") * col("na")))).as("sq"))
-      .groupBy("na", "nb")
-      .agg(sum(col("sq")).as("s_num"))
-      .select(col("na").as("n_a"), col("nb").as("n_b"),
-        col("s_num").cast("double").as("t_num"),
-        when(col("na") * col("nb") > 0,
-          col("s_num").cast("double")
-            / ((col("na") + col("nb")).cast("decimal(38,0)")
-              * (col("na") + col("nb")) * col("na") * col("nb"))
-              .cast("double")).as("t_stat"))
-  }
-
-  val cvmTestSql: String =
-    s"""WITH vals AS ($rankCohortsSql),
-       cc AS (SELECT v, a, b,
-                     CAST(SUM(a) OVER (ORDER BY v) AS BIGINT) AS ca,
-                     CAST(SUM(b) OVER (ORDER BY v) AS BIGINT) AS cb
-              FROM vals),
-       tot AS (SELECT CAST(SUM(a) AS BIGINT) AS na,
-                      CAST(SUM(b) AS BIGINT) AS nb FROM vals),
-       agg AS (SELECT t.na, t.nb,
-                      SUM((c.a + c.b)
-                          * (CAST(c.ca * t.nb - c.cb * t.na AS HUGEINT)
-                             * (c.ca * t.nb - c.cb * t.na))) AS s_num
-               FROM cc c CROSS JOIN tot t GROUP BY t.na, t.nb)
-       SELECT na AS n_a, nb AS n_b,
-              CAST(CAST(s_num AS VARCHAR) AS DOUBLE) AS t_num,
-              CASE WHEN na * nb > 0 THEN
-                CAST(CAST(s_num AS VARCHAR) AS DOUBLE)
-                  / CAST(CAST(CAST(na + nb AS HUGEINT) * (na + nb) * na * nb
-                              AS VARCHAR) AS DOUBLE) END AS t_stat
        FROM agg"""
 
   /** Core over any per-distinct-value cohort frame (v, a, b). */
@@ -1349,9 +1274,8 @@ object Inference {
     * engines); the global median comes from a TWO-PHASE rank with no
     * global window: slopes bucket by floor(slope · 2^20) (scaling by a
     * power of two is exact and monotone, so bucket order = value
-    * order), within-bucket ranks ride a bucket-partitioned window, and
-    * bucket offsets come from a self-join over the bucket-count frame
-    * (the cumulative_users offsets discipline). The lower median
+    * order) and the rank is a running count over those buckets
+    * ([[graft.functions.Keys.prefixSums]]). The lower median
     * (index ⌈m/2⌉, ties broken by the pair's day indexes) is
     * deterministic in both engines. Scale: |span|² pairs — grows with
     * observation time, never event volume. (round 6)
@@ -1367,19 +1291,12 @@ object Inference {
           / (col("b.di") - col("a.di")).cast("double")).as("slope"))
       .withColumn("bkt", floor(col("slope") * lit(1048576.0e0)).cast("long"))
       .localCheckpoint()
-    val wIn = Window.partitionBy(col("bkt"))
-      .orderBy(col("slope"), col("i"), col("j"))
-    val counts = pairs.groupBy("bkt").agg(count(lit(1)).as("c"))
-    val offs = counts.as("a").join(counts.as("b"),
-        col("b.bkt") < col("a.bkt"), "left")
-      .groupBy(col("a.bkt").as("bkt"))
-      .agg(coalesce(sum(col("b.c")), lit(0L)).as("off"))
     val m = pairs.agg(count(lit(1)).as("m"))
     val nDays = ser.agg(count(lit(1)).as("n_days"))
-    pairs.withColumn("rin", row_number().over(wIn).cast("long"))
-      .join(broadcast(offs), Seq("bkt"))
+    Keys.prefixSums(pairs.withColumn("rk", lit(1L)), Nil, col("bkt"),
+        Seq(col("slope"), col("i"), col("j")), Seq("rk"))
       .crossJoin(broadcast(m))
-      .filter(col("off") + col("rin") === expr("(m + 1) div 2"))
+      .filter(col("cum_rk") === expr("(m + 1) div 2"))
       .crossJoin(broadcast(nDays))
       .select(col("n_days"), col("m").as("n_pairs"),
         col("slope").as("ts_slope"))
@@ -1620,9 +1537,9 @@ object Inference {
     * S_t = C_t - (t/T)*C (cumulative minus the global trend line);
     * cross-multiplied to the EXACT integer D_t = T*C_t - t*C so the
     * argmax cannot be float-perturbed, with the earliest day as the
-    * deterministic tiebreak. Cumulative counts ride a per-year
-    * partitioned window + year offsets (the cumulative_users two-phase
-    * shape); pre/post means surface as single double divisions.
+    * deterministic tiebreak. Cumulative counts are
+    * [[graft.functions.Keys.prefixSums]] bucketed by year; pre/post
+    * means surface as single double divisions.
     */
   def cusumChangepoint(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
@@ -1635,20 +1552,10 @@ object Inference {
     val filled = broadcast(spine).join(daily, Seq("day"), "left")
       .select(col("day"), (datediff(col("day"), col("lo")) + 1).cast("long").as("t"),
         coalesce(col("n"), lit(0L)).as("n"))
-      .withColumn("yr", year(col("day")))
-    val wYr = Window.partitionBy(col("yr")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val yrTotals = filled.groupBy("yr").agg(sum(col("n")).as("yt"))
-    val off = yrTotals.as("a")
-      .join(yrTotals.as("b"), col("b.yr") < col("a.yr"), "left")
-      .groupBy(col("a.yr").as("yr"))
-      .agg(coalesce(sum(col("b.yt")), lit(0L)).as("off"))
     val tot = filled.agg(max(col("t")).as("tt"), sum(col("n")).as("c"))
-    filled.withColumn("cin", sum(col("n")).over(wYr))
-      .join(broadcast(off), Seq("yr"))
+    Keys.prefixSums(filled, Nil, year(col("day")), Seq(col("day")), Seq("n"))
       .crossJoin(broadcast(tot))
-      .select(col("day"), col("t"), col("tt"), col("c"),
-        (col("cin") + col("off")).as("ct"))
+      .select(col("day"), col("t"), col("tt"), col("c"), col("cum_n").as("ct"))
       .withColumn("d", col("tt") * col("ct") - col("t") * col("c"))
       .withColumn("d_abs", abs(col("d")))
       .orderBy(col("d_abs").desc, col("day"))
@@ -1689,12 +1596,13 @@ object Inference {
 
   /** Average rank table for one variable: (v, r2) where r2 = TWICE the
     * tie-averaged rank of value v — doubled so ties of even size stay
-    * integer: r2 = 2*(count below) + (count tied + 1). Built on
-    * [[cumCounts]]'s two-phase prefix sums (b-cohort zeroed).
+    * integer: r2 = 2*(count below) + (count tied + 1). Input: (v, a)
+    * with `a` the count at v; the running count is
+    * [[graft.functions.Keys.prefixSums]] over [[RankBucket]] buckets.
     */
   def avgRank2(vals: DataFrame): DataFrame =
-    cumCounts(vals.select(col("v"), col("a"), lit(0L).as("b")))
-      .select(col("v"), (lit(2L) * col("ca") - col("a") + 1).as("r2"))
+    Keys.prefixSums(vals, Nil, rankBucket, Seq(col("v")), Seq("a"))
+      .select(col("v"), (lit(2L) * col("cum_a") - col("a") + 1).as("r2"))
 
   /** Spearman rank correlation between line-item quantity and extended
     * price — the robust (monotone-invariant, outlier-resistant)
@@ -1901,9 +1809,9 @@ object Inference {
     * resample's weighted UPPER median — the smallest x whose cumulative
     * weight clears (n_eff+1)/2, i.e. for even n_eff=2m the (m+1)-th
     * order statistic — is selected by cumulative weight
-    * over a TWO-PHASE rank partitioned on (resample, value-bucket) —
-    * B×buckets parallel windows plus an aggregates-only offsets join,
-    * so no resample ever sorts in a single task. The spread of the B
+    * ([[graft.functions.Keys.prefixSums]] grouped by resample over
+    * [[RankBucket]] buckets — B×buckets parallel windows, so no
+    * resample ever sorts in a single task). The spread of the B
     * medians is the robust-location uncertainty estimate. (round 6)
     */
   def bootstrapMedians(s: SparkSession, dir: String): DataFrame = {
@@ -1921,23 +1829,13 @@ object Inference {
       .filter(col("w") > 0)
       .groupBy(col("b"), col("x")).agg(sum(col("w")).as("w"))
       .localCheckpoint() // feeds the rank chain AND the totals
-    val bucketed = wrows
-      .withColumn("bk", expr(s"CAST(x AS BIGINT) div $RankBucket"))
-    val wLoc = Window.partitionBy(col("b"), col("bk")).orderBy(col("x"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bt = bucketed.groupBy("b", "bk").agg(sum(col("w")).as("t"))
-    val off = bt.as("p").join(bt.as("q"),
-        col("p.b") === col("q.b") && col("q.bk") < col("p.bk"), "left")
-      .groupBy(col("p.b").as("b"), col("p.bk").as("bk"))
-      .agg(coalesce(sum(col("q.t")), lit(0L)).as("off"))
     val tot = wrows.groupBy("b").agg(sum(col("w")).as("n_eff"))
-    bucketed
-      .withColumn("cw", sum(col("w")).over(wLoc))
-      .join(broadcast(off), Seq("b", "bk"))
+    Keys.prefixSums(wrows, Seq("b"), expr(s"CAST(x AS BIGINT) div $RankBucket"),
+        Seq(col("x")), Seq("w"))
       .join(broadcast(tot), Seq("b"))
       .groupBy("b")
       .agg(max(col("n_eff")).as("n_eff"),
-        min(when((col("cw") + col("off")) * 2 >= col("n_eff") + 1, col("x")))
+        min(when(col("cum_w") * 2 >= col("n_eff") + 1, col("x")))
           .cast("double").as("median_price"))
       .select(col("b").cast("long").as("b"), col("n_eff"),
         col("median_price"))
@@ -2101,8 +1999,7 @@ object Inference {
     * Σ R_g²/n_g is unit-floored per group ([[decFloorDiv]]) so the H
     * total is one double tree over exact integers; the tie correction
     * divides by (N³−N) − Σ(t³−t), both exact DECIMAL(38,0). Scale:
-    * distinct-value rank table via the two-phase prefix sums (bucket
-    * window + aggregates-only offsets join — no global window), one
+    * distinct-value rank table ([[avgRank2]] — no global window), one
     * values-cardinality equi-join, one k-row aggregate. (round 6)
     */
   def kruskalWallis(s: SparkSession, dir: String): DataFrame =
@@ -2128,20 +2025,7 @@ object Inference {
     // Kept, matching the r15 both-checkpoints measurement.
     val totv = cells.groupBy("v").agg(sum(col("c")).as("tv"))
       .localCheckpoint() // feeds the rank chain AND the tie sum
-    val bucketed = totv
-      .withColumn("bk", expr(s"CAST(v AS BIGINT) div $RankBucket"))
-    val w = Window.partitionBy(col("bk")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bt = bucketed.groupBy("bk").agg(sum(col("tv")).as("t"))
-    val off = bt.as("x").join(bt.as("y"), col("y.bk") < col("x.bk"), "left")
-      .groupBy(col("x.bk").as("bk"))
-      .agg(coalesce(sum(col("y.t")), lit(0L)).as("off"))
-    val ranks = bucketed
-      .withColumn("cw", sum(col("tv")).over(w))
-      .join(broadcast(off), Seq("bk"))
-      .select(col("v"),
-        (lit(2L) * (col("cw") + col("off")) - col("tv") + 1).as("r2"))
-    val g = cells.join(ranks, Seq("v"))
+    val g = cells.join(avgRank2(totv.withColumnRenamed("tv", "a")), Seq("v"))
       .groupBy("grp")
       .agg(sum(col("c")).as("n_g"), sum(col("c") * col("r2")).as("r2_sum"))
       .localCheckpoint() // feeds the fixed-point terms AND the totals
@@ -2620,10 +2504,10 @@ object Inference {
   /** Global Lorenz curve in deciles — the 10-point inequality TABLE
     * behind [[giniRevenue]]'s scalar ("the bottom 60% of customers
     * hold 31% of revenue"): customers rank by exact DECIMAL revenue
-    * ascending via the TWO-PHASE bucketed rank (revenue-quanta
-    * partitioned row_number + aggregates-only offsets — a GLOBAL
-    * curve, so the per-nation window gini rides is unavailable and a
-    * global window is banned), each customer's first covering decile
+    * ascending, a running count under (q, ck) from
+    * [[graft.functions.Keys.prefixSums]] over revenue-quanta buckets (a
+    * GLOBAL curve, so the per-nation window gini rides is unavailable
+    * and a global window is banned), each customer's first covering decile
     * comes from the exact integer cut r ≤ (d·N) div 10, and decile
     * cumulative shares are suffix sums over a ≤10-row frame. Exact
     * decimal revenue mass until one division per decile; decile 10
@@ -2638,21 +2522,15 @@ object Inference {
       .select(col("o_custkey").as("ck"), col("rev"),
         (col("rev") * 10000).cast("long").as("q"))
       .localCheckpoint() // customer-sized; feeds rank chain AND totals
-    val bucketed = rev.withColumn("bk", expr(s"q div $RankBucket"))
-    val wLoc = Window.partitionBy("bk").orderBy(col("q"), col("ck"))
-    val bt = bucketed.groupBy("bk").agg(count(lit(1)).as("t"))
-    val off = bt.as("p").join(bt.as("r"), col("r.bk") < col("p.bk"), "left")
-      .groupBy(col("p.bk").as("bk"))
-      .agg(coalesce(sum(col("r.t")), lit(0L)).as("off"))
     val tot = rev.agg(count(lit(1)).as("nc"),
       sum(col("rev")).cast("decimal(38,4)").as("trev"))
     val dmin = (1 to 10).foldRight(lit(10L): org.apache.spark.sql.Column) {
       (d, acc) =>
         when(expr(s"($d * nc) div 10") >= col("r"), d.toLong).otherwise(acc)
     }
-    val perD = bucketed.withColumn("rn", row_number().over(wLoc))
-      .join(broadcast(off), Seq("bk"))
-      .select(col("rev"), (col("rn") + col("off")).as("r"))
+    val perD = Keys.prefixSums(rev.withColumn("r", lit(1L)), Nil,
+        expr(s"q div $RankBucket"), Seq(col("q"), col("ck")), Seq("r"))
+      .select(col("rev"), col("cum_r").as("r"))
       .crossJoin(broadcast(tot))
       .select(col("rev"), dmin.as("d"))
       .groupBy("d")
@@ -3645,9 +3523,9 @@ ${(1 to AcfMaxLag).map { mm =>
     * JT = Σ_{i<j} U_ij over ordered group pairs. Computed WITHOUT any
     * pairwise row join: U_ij = Σ_v cnt_j(v)·(#i-rows below v + ties/2),
     * so the whole statistic needs only each group's exact step-CDF on
-    * the shared price grid — the SOURCE-PARTITIONED two-phase prefix
-    * sum ([[graft.operators.Curation.ksSourceMatrix]]'s round-8
-    * machinery, here keyed by priority), then one grid-sized equi-join
+    * the shared price grid ([[graft.functions.Keys.prefixSums]] grouped
+    * by priority, as in [[graft.operators.Curation.ksSourceMatrix]]),
+    * then one grid-sized equi-join
     * on the value with the group ORDER as a 5×5-bounded residual.
     * Doubled (JT×2) to keep tie halves integral; mean and the UNTIED
     * variance (documented approximation under ties — prices are
@@ -3671,21 +3549,9 @@ ${(1 to AcfMaxLag).map { mm =>
     val grid0 = vals.crossJoin(grps)
       .join(cells, Seq("g", "v"), "left")
       .select(col("g"), col("v"), coalesce(col("c"), lit(0L)).as("c0"))
-    val bucketed = grid0.withColumn("bk",
-      floor(col("v") / lit(JtValBucket)).cast("long"))
-    val w = Window.partitionBy(col("g"), col("bk")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bt = bucketed.groupBy("g", "bk").agg(sum(col("c0")).as("t"))
-    val off = bt.as("x")
-      .join(bt.as("y"), col("y.g") === col("x.g")
-        && col("y.bk") < col("x.bk"), "left")
-      .groupBy(col("x.g").as("g"), col("x.bk").as("bk"))
-      .agg(coalesce(sum(col("y.t")), lit(0L)).as("off"))
-    val grid = bucketed
-      .withColumn("cw", sum(col("c0")).over(w))
-      .join(broadcast(off), Seq("g", "bk"))
-      .select(col("g"), col("v"), col("c0"),
-        (col("cw") + col("off")).as("cum"))
+    val grid = Keys.prefixSums(grid0, Seq("g"),
+        floor(col("v") / lit(JtValBucket)).cast("long"), Seq(col("v")), Seq("c0"))
+      .withColumnRenamed("cum_c0", "cum")
     // U_ij doubled: cnt_j·(2·below_i + ties_i) = cnt_j·(2·cum_i − c0_i)
     val jt2 = cells.as("j")
       .join(grid.as("i"), col("i.v") === col("j.v")

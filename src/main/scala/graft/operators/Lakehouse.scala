@@ -52,7 +52,7 @@ object Lakehouse {
     * The window is partitioned per key (never global) and the join
     * shuffles each side once on the key — the same plan MERGE INTO
     * compiles to in Delta/Iceberg, and the batch twin of
-    * [[graft.sources.Warehouse.upsertDim]]'s streaming get-or-create.
+    * [[graft.sources.Warehouse.upsertDims]]'s streaming get-or-create.
     */
   def cdcMergeApply(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.customer(s, dir).select(

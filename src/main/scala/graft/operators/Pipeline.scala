@@ -119,17 +119,12 @@ object Pipeline {
   /** Skill stage: the reference gets skills from BOTH the NER payload
     * (skills struct, flattened) and skillner's phrase matching; the
     * union feeds the skill dimension and bridge. Phrase matching is a
-    * broadcast-vocabulary equi-join over unigrams + array-side bigrams.
+    * broadcast-vocabulary equi-join over [[SkillExtract.terms]].
     */
   def offerSkills(offers: DataFrame, vocab: DataFrame): DataFrame = {
-    val toksC = filter(split(lower(col("description")), "\\s+"), t => t =!= lit(""))
-    val bigrams = when(size(toksC) >= 2,
-      zip_with(slice(toksC, lit(1), size(toksC) - 1),
-        slice(toksC, lit(2), size(toksC) - 1),
-        (x, y) => concat(x, lit(" "), y)))
-      .otherwise(array().cast("array<string>"))
+    val toks = filter(split(lower(col("description")), "\\s+"), t => t =!= lit(""))
     val matched = offers
-      .select(col("job_url"), explode(concat(toksC, bigrams)).as("term"))
+      .select(col("job_url"), explode(SkillExtract.terms(toks)).as("term"))
       .join(broadcast(vocab), col("term") === vocab("skill"))
       .select(col("job_url"), col("skill").as("nom"),
         col("skill_type").as("type_skill"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Q
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Skill-NER surface — the reference's skillner stage
@@ -56,6 +56,17 @@ object SkillExtract {
   private def phraseMatches(s: SparkSession, dir: String): DataFrame =
     phraseMatchStream(s, dir).distinct()
 
+  /** skillner's full-match terms of a token array: the tokens plus
+    * each adjacent-token bigram ("a b"). */
+  def terms(toks: Column): Column = {
+    val bigrams = when(size(toks) >= 2,
+      zip_with(slice(toks, lit(1), size(toks) - 1),
+        slice(toks, lit(2), size(toks) - 1),
+        (x, y) => concat(x, lit(" "), y)))
+      .otherwise(array().cast("array<string>"))
+    concat(toks, bigrams)
+  }
+
   /** The PRE-dedup match stream (one row per occurrence) — map-side
     * only: tokenize + broadcast vocabulary join, no shuffle. Exposed to
     * consumers whose own aggregation dedups anyway (collect_set in
@@ -67,14 +78,8 @@ object SkillExtract {
   private[operators] def phraseMatchStream(s: SparkSession,
       dir: String): DataFrame = {
     val v = broadcast(vocabDf(s))
-    val toks = split(col("text"), "\\s+")
-    val bigrams = when(size(toks) >= 2,
-      zip_with(slice(toks, lit(1), size(toks) - 1),
-        slice(toks, lit(2), size(toks) - 1),
-        (x, y) => concat(x, lit(" "), y)))
-      .otherwise(array().cast("array<string>"))
     Tables.documents(s, dir)
-      .select(col("doc_id"), explode(concat(toks, bigrams)).as("term"))
+      .select(col("doc_id"), explode(terms(split(col("text"), "\\s+"))).as("term"))
       .join(v, col("term") === v("skill"))
       .select(col("doc_id"), col("skill"), col("skill_type"), col("skill_id"))
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Q
+import graft.functions.Keys
 import graft.functions.Nums._
 import graft.functions.Text._
 import graft.sources.Tables
@@ -925,22 +926,11 @@ object Stats {
     val daily = broadcast(spine)
       .join(newUsers, Seq("day"), "left")
       .select(col("day"), coalesce(col("nu"), lit(0L)).as("new_users"))
-      .withColumn("yr", year(col("day")))
-    // two-phase running sum (the denseIds pattern): a per-year
-    // partitioned window plus year offsets from a years²-sized
-    // self-join — no global single-task window even though the day
-    // series is calendar-bounded
-    val wYr = Window.partitionBy(col("yr")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val yrTotals = daily.groupBy("yr").agg(sum(col("new_users")).as("yt"))
-    val offsets = yrTotals.as("a")
-      .join(yrTotals.as("b"), col("b.yr") < col("a.yr"), "left")
-      .groupBy(col("a.yr").as("yr"))
-      .agg(coalesce(sum(col("b.yt")), lit(0L)).as("off"))
-    daily.withColumn("cum_in_yr", sum(col("new_users")).over(wYr))
-      .join(broadcast(offsets), Seq("yr"))
+    // bucketed by year: no global single-task window even though the
+    // day series is calendar-bounded
+    Keys.prefixSums(daily, Nil, year(col("day")), Seq(col("day")), Seq("new_users"))
       .select(col("day"), col("new_users"),
-        (col("cum_in_yr") + col("off")).as("cumulative_users"))
+        col("cum_new_users").as("cumulative_users"))
       .orderBy("day")
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Q
+import graft.functions.Keys
 import graft.functions.Nums._
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -1094,11 +1095,10 @@ object Temporal {
     * ("how many sessions were open at the worst moment of each day")
     * over [[sessionize]]'s intervals: every session emits a +1 at its
     * start and a −1 at its end; the running sum at any instant is the
-    * concurrency. The prefix sum is TWO-PHASE (day-partitioned window
-    * + carry-in offsets from an aggregates-only theta-join over the
-    * per-day delta totals — the cumulative_users discipline), so
-    * cross-midnight sessions carry exactly and no global window
-    * exists. Tie order at equal timestamps is (+1 before −1, then
+    * concurrency. The prefix sum is [[graft.functions.Keys.prefixSums]]
+    * bucketed by day, so cross-midnight sessions carry in exactly from
+    * the earlier days' totals and no global window exists. Tie order
+    * at equal timestamps is (+1 before −1, then
     * user, session): touching sessions count as concurrent —
     * documented convention. Days with no session boundary emit no row
     * (concurrency is constant across them). Scale: deltas are
@@ -1117,18 +1117,10 @@ object Temporal {
         col("e.t").as("t"), col("e.d").as("d"),
         col("user_id"), col("session_id"))
       .localCheckpoint() // feeds the sweep AND the carry-in totals
-    val wd = Window.partitionBy(col("day"))
-      .orderBy(col("t"), col("d").desc, col("user_id"), col("session_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val dayTot = deltas.groupBy("day").agg(sum(col("d")).as("dt"))
-    val carry = dayTot.as("a")
-      .join(dayTot.as("b"), col("b.day") < col("a.day"), "left")
-      .groupBy(col("a.day").as("day"))
-      .agg(coalesce(sum(col("b.dt")), lit(0L)).as("carry"))
-    deltas.withColumn("c", sum(col("d")).over(wd))
-      .join(broadcast(carry), Seq("day"))
+    Keys.prefixSums(deltas, Nil, col("day"),
+        Seq(col("t"), col("d").desc, col("user_id"), col("session_id")), Seq("d"))
       .groupBy("day")
-      .agg(max(col("c") + col("carry")).as("peak_concurrent"),
+      .agg(max(col("cum_d")).as("peak_concurrent"),
         sum(when(col("d") === 1L, 1L).otherwise(0L)).as("n_starts"),
         sum(when(col("d") === -1L, 1L).otherwise(0L)).as("n_ends"))
       .orderBy("day")
@@ -1159,9 +1151,9 @@ object Temporal {
   /** Conversion-delay quartiles — the latency distribution behind
     * [[timeToConvert]]'s per-user table ("how long from first view to
     * first purchase", answered as p25/p50/p75 instead of a wall of
-    * rows). Quartiles select by the TWO-PHASE rank over hour-bucketed
-    * delays (bucket-partitioned row_number + aggregates-only offsets —
-    * the no-global-window discipline at user cardinality), index
+    * rows). Quartiles select by rank, a running count under
+    * (delay, user) from [[graft.functions.Keys.prefixSums]] over
+    * hour-bucketed delays (no global window at user cardinality), index
     * convention (p·(n+1)) div 4; the conversion rate rides the same
     * pass. Seconds surface as one µs/1e6 division. (round 6)
     */
@@ -1172,18 +1164,11 @@ object Temporal {
       .localCheckpoint() // feeds the rank chain AND the totals
     val conv = t.filter(col("converted"))
       .select(col("user_id"),
-        (col("first_purchase_us") - col("first_view_us")).as("delay_us"))
-    val bucketed = conv.withColumn("bk", expr("delay_us div 3600000000L"))
-    val w = Window.partitionBy(col("bk"))
-      .orderBy(col("delay_us"), col("user_id"))
-    val bt = bucketed.groupBy("bk").agg(count(lit(1)).as("c"))
-    val off = bt.as("x").join(bt.as("y"), col("y.bk") < col("x.bk"), "left")
-      .groupBy(col("x.bk").as("bk"))
-      .agg(coalesce(sum(col("y.c")), lit(0L)).as("off"))
-    val ranked = bucketed
-      .withColumn("rn", row_number().over(w))
-      .join(broadcast(off), Seq("bk"))
-      .select(col("delay_us"), (col("rn") + col("off")).as("rk"))
+        (col("first_purchase_us") - col("first_view_us")).as("delay_us"),
+        lit(1L).as("rk"))
+    val ranked = Keys.prefixSums(conv, Nil, expr("delay_us div 3600000000L"),
+        Seq(col("delay_us"), col("user_id")), Seq("rk"))
+      .select(col("delay_us"), col("cum_rk").as("rk"))
     val tot = t.agg(count(lit(1)).as("n_viewers"),
       sum(when(col("converted"), 1L).otherwise(0L)).as("n_converted"))
     ranked.crossJoin(broadcast(tot))

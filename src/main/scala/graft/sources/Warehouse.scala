@@ -137,14 +137,6 @@ object Warehouse {
     ids
   }
 
-  /** [[upsertDims]] for one table of `values`' columns plus `idCol`.
-    * Returns the post-upsert dimension. */
-  def upsertDim(values: DataFrame, path: String, idCol: String): DataFrame = {
-    val cols = values.columns.toSeq
-    val t = DimTable(path, path, cols.map(c => c -> c) :+ ("id" -> idCol))
-    t.rows(upsertDims(values.withColumn("dim", lit(path)), cols, Seq(t), identity))
-  }
-
   /** Bloom-accelerated DEDUP-APPEND sink: append only rows whose key
     * has never been stored, maintaining a [[graft.plans.BloomFilter]]
     * blob next to the data so the history check starts map-side.
@@ -295,7 +287,7 @@ object Warehouse {
     s.read.jdbc(url, table, props)
 
   /** TYPE-2 slowly-changing dimension upsert — the history-keeping
-    * sibling of [[upsertDim]]'s type-1 get-or-create (the reference
+    * sibling of [[upsertDims]]'s type-1 get-or-create (the reference
     * overwrites dim attributes in place; a type-2 dim is what lets a
     * fact row join the attributes that were TRUE AT LOAD TIME —
     * Kimball's SCD2). Each natural key carries versioned rows

@@ -257,7 +257,10 @@ class LakeWarehouseSpec extends AnyFunSuite {
   test("upsertDim: an existing dim that cannot be read fails, files untouched") {
     import spark.implicits._
     val dim = Files.createTempDirectory("graft_dim").toString + "/dim_source"
-    Warehouse.upsertDim(Seq("alpha", "beta").toDF("value"), dim, "id_source")
+    val t = Warehouse.DimTable("dim_source", dim, Seq("value" -> "value", "id" -> "id_source"))
+    def upsert(values: String*) = Warehouse.upsertDims(
+      values.toDF("value").withColumn("dim", lit("dim_source")), Seq("value"), Seq(t), identity)
+    upsert("alpha", "beta")
     // schema inference reads the summary file first, so a junk one makes
     // the dim unreadable while its data files are intact
     Files.write(java.nio.file.Paths.get(dim, "_common_metadata"),
@@ -265,8 +268,7 @@ class LakeWarehouseSpec extends AnyFunSuite {
     def files() = new java.io.File(dim).listFiles().map(f =>
       f.getName -> java.util.Arrays.hashCode(Files.readAllBytes(f.toPath))).toMap
     val before = files()
-    val e = intercept[Exception](
-      Warehouse.upsertDim(Seq("gamma").toDF("value"), dim, "id_source"))
+    val e = intercept[Exception](upsert("gamma"))
     assert(e.getMessage.contains(dim))
     assert(files() === before, "a failed read must not rewrite the dim")
   }
