@@ -1,5 +1,8 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicReference
+
 import graft.functions.Nums._
 import graft.sources.{JsonLake, Warehouse}
 import org.apache.spark.rdd.RDD
@@ -24,6 +27,25 @@ import org.apache.spark.sql.types._
   * the enriched offers, their skill links and the numbered dims — at
   * [[materializing]], so no write replays the scan, the dedup
   * window or the numbering.
+  *
+  * Each load runs as a small dependency graph of steps ([[inSteps]]): a
+  * checkpoint, a dim read, a write or a count starts as soon as the
+  * steps it reads are done, so independent Spark jobs overlap. A step
+  * waits only on its data inputs, with two exceptions:
+  *  - no warehouse append happens before the quality gate's verdict
+  *    (only the increment has a gate:
+  *    [[graft.streaming.StreamingPipeline.loadBatch]]);
+  *  - no `fact_offre` or `offre_skill` row is written before every dim
+  *    of the load is written, so a load that fails part-way never
+  *    leaves a fact or a skill link pointing at a missing dim row.
+  * The rebuild: the offers' checkpoint; then, beside each other, the raw
+  * and offers counts, the quarantine, `dim_date` and the skill links;
+  * the numbering once the links are done; the seven numbered dims
+  * together; then `fact_offre` beside `offre_skill`. The increment: the
+  * seven dim reads beside the offers' checkpoint; the gate beside the
+  * skill links; then `load_audit`, the quarantine, the numbering, the
+  * dim appends and `fact_offre` beside `offre_skill`, each as soon as
+  * its inputs are ready.
   *
   * The star load is defined once, here, for both loaders: the rebuild
   * ([[run]]) and the increment
@@ -257,15 +279,68 @@ object Pipeline {
   /** The loaders' one materialization point: `keep(df)` inside `body`
     * computes `df` once (an eager `localCheckpoint`, which also cuts its
     * lineage, so later plans neither replay nor re-analyze it); every
-    * block `keep` made is released when `body` returns or throws.
+    * block `keep` made is released when `body` returns or throws. `keep`
+    * may be called from several [[inSteps]] steps at once; run those
+    * steps inside `body`, so that they have all returned before the
+    * blocks go.
     */
   private[graft] def materializing[T](body: (DataFrame => DataFrame) => T): T = {
-    val kept = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    val kept = new ConcurrentLinkedQueue[RDD[_]]
     try body { df =>
       val cp = df.localCheckpoint()
-      kept ++= cp.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      cp.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }.foreach(kept.add)
       cp
-    } finally kept.foreach(_.unpersist(blocking = false))
+    } finally kept.forEach(_.unpersist(blocking = false))
+  }
+
+  /** One step of a load ([[inSteps]]): `apply()` waits for it and
+    * returns its value, or throws its own exception. */
+  private[graft] final class Step[A] private[Pipeline] (body: => A, failed: AtomicReference[Throwable]) {
+    @volatile private[this] var out: Either[Throwable, A] = _
+    private[Pipeline] val thread = new Thread(() => out =
+      try Right(body) catch { case e: Throwable => failed.compareAndSet(null, e); Left(e) },
+      "graft-load-step")
+    thread.setDaemon(true)
+    def apply(): A = { thread.join(); out.fold(e => throw e, identity) }
+  }
+
+  /** Starts a step of a load: `step(body)`. */
+  private[graft] trait Steps { def apply[A](body: => A): Step[A] }
+
+  /** The loaders' one scheduling seam: `step(f)` inside `body` starts
+    * `f` at once on a daemon thread of its own, and a step waits for the
+    * steps it reads by calling them. So each step starts its Spark
+    * jobs as soon as its inputs are done, and the jobs of independent
+    * steps run at the same time (Spark schedules jobs submitted from
+    * separate threads concurrently). The load's threads — one per step,
+    * its whole pool — are made inside the load, so each inherits the
+    * caller's Spark local properties: a streaming query's job group,
+    * which lets `stop()` cancel them, and its SQL execution id.
+    *
+    * Every step has ended before `inSteps` returns or throws. The first
+    * step (or `body` itself) to fail is rethrown as it was thrown, once
+    * all the others have ended; a step that waits on a failed one
+    * throws the same exception.
+    */
+  private[graft] def inSteps[T](body: Steps => T): T = {
+    val failed = new AtomicReference[Throwable]
+    val started = new ConcurrentLinkedQueue[Thread]
+    val out = try Some(body(new Steps {
+      def apply[A](f: => A): Step[A] = {
+        val s = new Step(f, failed)
+        started.add(s.thread)
+        s.thread.start()
+        s
+      }
+    })) catch { case e: Throwable => failed.compareAndSet(null, e); None }
+    var interrupted = false
+    var t = started.poll()
+    while (t != null)
+      try { t.join(); t = started.poll() }
+      catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread.interrupt()
+    Option(failed.get).foreach(e => throw e)
+    out.get
   }
 
   /** The shared prefix of every load: quarantine the raw landing frame,
@@ -289,6 +364,33 @@ object Pipeline {
   final case class Result(nRaw: Long, nClean: Long, nQuarantined: Long,
       nFacts: Long, nSkillLinks: Long)
 
+  /** `dim_date`: a calendar spine over the offers' observed publication
+    * range with the FULL attribute set of the reference's
+    * populate_calendar (insert_to_postgres.py:95-135): month_name (%B),
+    * year_month (%Y%m), ISO week, date_str (%d/%m/%Y), plus the
+    * DEFAULT_DATE sentinel row (2000-01-01) facts with no valid date
+    * point at.
+    */
+  private def calendar(offers: DataFrame): DataFrame = {
+    val sentinel = offers.sparkSession.range(1)
+      .select(to_date(lit(SentinelDate)).as("full_date"))
+    offers.filter(col("pub_date").isNotNull)
+      .agg(min(col("pub_date")).as("lo"), max(col("pub_date")).as("hi"))
+      .select(explode(sequence(col("lo"), col("hi"))).as("full_date"))
+      .unionByName(sentinel).distinct()
+      .select(col("full_date"),
+        dayofmonth(col("full_date")).as("jour"),
+        month(col("full_date")).as("mois"),
+        quarter(col("full_date")).as("trimestre"),
+        year(col("full_date")).as("annee"),
+        (weekday(col("full_date")) + 1).as("jour_semaine"),
+        (year(col("full_date")) * 100 + month(col("full_date")))
+          .as("year_month"),
+        weekofyear(col("full_date")).as("week_of_year"),
+        date_format(col("full_date"), "MMMM").as("month_name"),
+        date_format(col("full_date"), "dd/MM/yyyy").as("date_str"))
+  }
+
   /** Run the full flow from a JSON lake to a warehouse directory: the
     * REBUILD, which overwrites every table. Its dims number each
     * distinct value in sorted order, and `fact_offre` holds only the
@@ -296,55 +398,44 @@ object Pipeline {
     */
   def run(s: SparkSession, lakePath: String, outDir: String): Result = {
     val raw = JsonLake.readJson(s, lakePath, offerSchema)
-    withOffers(raw)((cleaned, bad) => materializing { keep =>
-      val offers = keep(cleaned)
+    withOffers(raw)((cleaned, bad) => materializing(keep => inSteps { step =>
+      val offers = step(keep(cleaned))
+      // the offers' checkpoint fills the cache of `raw`; a second reader
+      // started before it ends would fill it again in a job of its own
+      val lake = step {
+        offers()
+        raw.agg(count(lit(1)), count(col(JsonLake.CorruptCol))).head
+      }
+      step { offers(); bad.write.mode("overwrite").json(s"$outDir/quarantine") }
+      val nClean = step(offers().count())
       // skill dim is get-or-create over the UNION of payload + matched
       // skills (insert_to_postgres.py get_or_create dim_skill semantics)
-      val links = keep(offerSkills(offers, SkillExtract.vocabDf(s)))
-      val ids = keep(Warehouse.numberDims(stackedDims(offers, links),
-        DimValueCols, None))
+      val links = step(keep(offerSkills(offers(), SkillExtract.vocabDf(s))))
+      val ids = step(keep(Warehouse.numberDims(stackedDims(offers(), links()),
+        DimValueCols, None)))
       val tables = dimTables(outDir)
       // a rebuild also writes dim_compagnie's secteur attribute
-      tables.map(t => if (t.dim != "dim_compagnie") t
+      val dims = tables.map(t => if (t.dim != "dim_compagnie") t
           else t.copy(cols = t.cols.patch(1, Seq("secteur" -> "secteur"), 0)))
-        .foreach(t => Warehouse.writeDim(t.rows(ids), t.path))
-
-      // dim_date: calendar spine over the observed publication range
-      // with the FULL attribute set of the reference's populate_calendar
-      // (insert_to_postgres.py:95-135): month_name (%B), year_month
-      // (%Y%m), ISO week, date_str (%d/%m/%Y), plus the DEFAULT_DATE
-      // sentinel row (2000-01-01) facts with no valid date point at.
-      val sentinel = s.range(1)
-        .select(to_date(lit(SentinelDate)).as("full_date"))
-      val dDate = offers.filter(col("pub_date").isNotNull)
-        .agg(min(col("pub_date")).as("lo"), max(col("pub_date")).as("hi"))
-        .select(explode(sequence(col("lo"), col("hi"))).as("full_date"))
-        .unionByName(sentinel).distinct()
-        .select(col("full_date"),
-          dayofmonth(col("full_date")).as("jour"),
-          month(col("full_date")).as("mois"),
-          quarter(col("full_date")).as("trimestre"),
-          year(col("full_date")).as("annee"),
-          (weekday(col("full_date")) + 1).as("jour_semaine"),
-          (year(col("full_date")) * 100 + month(col("full_date")))
-            .as("year_month"),
-          weekofyear(col("full_date")).as("week_of_year"),
-          date_format(col("full_date"), "MMMM").as("month_name"),
-          date_format(col("full_date"), "dd/MM/yyyy").as("date_str"))
-      Warehouse.writeDim(dDate, s"$outDir/dim_date")
+        .map(t => step(Warehouse.writeDim(t.rows(ids()), t.path))) :+
+        step(Warehouse.writeDim(calendar(offers()), s"$outDir/dim_date"))
 
       val written = Seq("fact_offre", "offre_skill").map(Observation(_))
-      Warehouse.writeFactPartitioned(facts(offers, tables.init.map(_.rows(ids)))
-        .filter(col("ym").isNotNull).observe(written(0), count(lit(1)).as("n")),
-        s"$outDir/fact_offre", "ym", "job_url")
-      bridge(links, tables.last.rows(ids)).observe(written(1), count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$outDir/offre_skill")
-      bad.write.mode("overwrite").json(s"$outDir/quarantine")
-
-      val lake = raw.agg(count(lit(1)), count(col(JsonLake.CorruptCol))).head
+      val fact = step {
+        dims.foreach(_())
+        Warehouse.writeFactPartitioned(facts(offers(), tables.init.map(_.rows(ids())))
+          .filter(col("ym").isNotNull).observe(written(0), count(lit(1)).as("n")),
+          s"$outDir/fact_offre", "ym", "job_url")
+      }
+      val skills = step {
+        dims.foreach(_())
+        bridge(links(), tables.last.rows(ids())).observe(written(1), count(lit(1)).as("n"))
+          .write.mode("overwrite").parquet(s"$outDir/offre_skill")
+      }
+      fact(); skills()
       // AQE drops the observation of a plan it found empty: no row written
       val Seq(nFacts, nLinks) = written.map(_.get.getOrElse("n", 0L).asInstanceOf[Long])
-      Result(lake.getLong(0), offers.count(), lake.getLong(1), nFacts, nLinks)
-    })
+      Result(lake().getLong(0), nClean(), lake().getLong(1), nFacts, nLinks)
+    }))
   }
 }

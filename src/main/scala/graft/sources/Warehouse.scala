@@ -119,23 +119,28 @@ object Warehouse {
       coalesce(max(col("id")).over(Window.partitionBy("dim")), lit(0)) + rank))
   }
 
-  /** Incremental get-or-create for the parquet dims `tables`: each is
-    * read once, [[numberDims]] runs once (its result put through
-    * `keep`), and only the tables that gained values are appended, one
-    * file each (the first append creates a table). Returns the numbered
-    * frame.
+  /** Incremental get-or-create for the parquet dims `tables`, as
+    * [[graft.operators.Pipeline.inSteps]] steps: each table is read by a
+    * step of its own, started before `values` is evaluated, so the reads
+    * overlap whatever `values` waits for; [[numberDims]] runs once (its
+    * result put through `keep`); and each table that gained values is
+    * appended, one file each, by a step of its own (the first append
+    * creates a table). Returns the numbered frame once every append has
+    * ended.
     */
-  def upsertDims(values: DataFrame, valueCols: Seq[String],
-      tables: Seq[DimTable], keep: DataFrame => DataFrame): DataFrame = {
-    val existing = tables.flatMap(_.read(values.sparkSession))
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-    val ids = keep(numberDims(values, valueCols, existing))
-    val added = ids.filter(col("fresh"))
-    val grown = added.select("dim").collect().map(_.getString(0)).toSet
-    tables.filter(t => grown(t.dim)).foreach(t =>
-      t.rows(added).coalesce(1).write.mode(SaveMode.Append).parquet(t.path))
-    ids
-  }
+  def upsertDims(values: => DataFrame, valueCols: Seq[String],
+      tables: Seq[DimTable], keep: DataFrame => DataFrame): DataFrame =
+    graft.operators.Pipeline.inSteps { step =>
+      val s = SparkSession.active
+      val stored = tables.map(t => step(t.read(s)))
+      val ids = keep(numberDims(values, valueCols, stored.flatMap(_())
+        .reduceOption(_.unionByName(_, allowMissingColumns = true))))
+      val added = ids.filter(col("fresh"))
+      val grown = added.select("dim").collect().map(_.getString(0)).toSet
+      tables.filter(t => grown(t.dim)).foreach(t =>
+        step(t.rows(added).coalesce(1).write.mode(SaveMode.Append).parquet(t.path)))
+      ids
+    }
 
   /** Bloom-accelerated DEDUP-APPEND sink: append only rows whose key
     * has never been stored, maintaining a [[graft.plans.BloomFilter]]

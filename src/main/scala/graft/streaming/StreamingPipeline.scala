@@ -16,7 +16,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * some of its appends is replayed with the same `batchId`, and
   * [[loadBatch]] ignores that id, so a replay appends facts, bridge
   * rows, `load_audit` and quarantine rows a second time (ROADMAP item
-  * 2; the JDBC and manifest sinks below are keyed by `batchId`).
+  * 2; the JDBC and manifest sinks below are keyed by `batchId`). Which
+  * appends a crash can have made is stated by [[Pipeline]]'s ordering
+  * rules (see [[loadBatch]]).
   *
   * Batch `Pipeline.run` stays the rebuild path; this is the tailing
   * path a production lake runs continuously. Both load the one star
@@ -72,30 +74,42 @@ object StreamingPipeline {
     * once, is always appended to `load_audit`; if any expectation fails,
     * the batch is diverted to `rejected_batches` and the warehouse is
     * NOT touched — fail the load, never publish a corrupt snapshot.
+    *
+    * The load runs as [[Pipeline]]'s step graph, so what a crash leaves
+    * behind is stated by its two ordering rules, not by the order of
+    * the code: nothing is appended before the gate's verdict, and no
+    * fact or bridge row is appended before every dim the batch grew is
+    * written. A batch that fails in a dim append has appended no fact or
+    * bridge row; its `load_audit` and quarantine rows may be there.
     */
   def loadBatch(batch: DataFrame, outDir: String, batchId: Long = -1L,
       checks: Seq[(String, org.apache.spark.sql.Column)] = offerChecks)
       : Unit = Pipeline.withOffers(batch)((cleaned, bad) =>
-    Pipeline.materializing { keep =>
-      val offers = keep(cleaned)
-      val gate = keep(DataQuality.constraintSuite(offers, checks)
-        .withColumn("batch_id", lit(batchId)))
-      gate.write.mode("append").parquet(s"$outDir/load_audit")
-      if (!gate.filter(!col("passed")).isEmpty)
-        offers.write.mode("append").parquet(s"$outDir/rejected_batches")
-      else {
-        val links = keep(Pipeline.offerSkills(offers,
-          SkillExtract.vocabDf(batch.sparkSession)))
-        val tables = Pipeline.dimTables(outDir)
-        val ids = Warehouse.upsertDims(Pipeline.stackedDims(offers, links),
-          Pipeline.DimValueCols, tables, keep)
-        Pipeline.facts(offers, tables.init.map(_.rows(ids)))
-          .write.mode("append").parquet(s"$outDir/fact_offre")
-        Pipeline.bridge(links, tables.last.rows(ids))
-          .write.mode("append").parquet(s"$outDir/offre_skill")
+    Pipeline.materializing(keep => Pipeline.inSteps { step =>
+      val offers = step(keep(cleaned))
+      val gate = step {
+        val report = keep(DataQuality.constraintSuite(offers(), checks)
+          .withColumn("batch_id", lit(batchId)))
+        (report, report.filter(!col("passed")).isEmpty)
       }
-      bad.write.mode("append").json(s"$outDir/quarantine")
-    })
+      val passed = () => gate()._2
+      step(gate()._1.write.mode("append").parquet(s"$outDir/load_audit"))
+      step(if (!passed()) offers().write.mode("append").parquet(s"$outDir/rejected_batches"))
+      step { passed(); bad.write.mode("append").json(s"$outDir/quarantine") }
+      val links = step(keep(Pipeline.offerSkills(offers(),
+        SkillExtract.vocabDf(batch.sparkSession))))
+      val tables = Pipeline.dimTables(outDir)
+      // the dims are read as soon as the load starts; the numbering
+      // takes the batch's rows only once the gate has passed them, so a
+      // refused batch appends no dim row
+      val ids = step(Warehouse.upsertDims(
+        Pipeline.stackedDims(offers(), links()).filter(lit(passed())),
+        Pipeline.DimValueCols, tables, keep))
+      step(if (passed()) Pipeline.facts(offers(), tables.init.map(_.rows(ids())))
+        .write.mode("append").parquet(s"$outDir/fact_offre"))
+      step(if (passed()) Pipeline.bridge(links(), tables.last.rows(ids()))
+        .write.mode("append").parquet(s"$outDir/offre_skill"))
+    }))
 
   /** Drain all currently-available lake files and stop. */
   def runOnce(s: SparkSession, lakeDir: String, outDir: String,

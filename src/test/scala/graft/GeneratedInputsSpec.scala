@@ -628,9 +628,17 @@ class GeneratedInputsSpec extends AnyFunSuite {
         a <- Gen.choose(0, n - 1); b <- Gen.choose(0, n - 1)
       } yield (s"v$a", s"v$b"))
     } yield es.filter(e => e._1 != e._2).distinct
-    sample(edgeGen, 20).filter(_.nonEmpty).foreach { und =>
-      val sym = (und ++ und.map(_.swap)).distinct
-      val e = sym.toDF("src", "dst").localCheckpoint()
+    // every graph rides ONE frame with its nodes prefixed by its case
+    // index: BFS never crosses the disjoint components, so each node's
+    // expected value is its own graph's
+    val graphs = sample(edgeGen, 20).filter(_.nonEmpty).zipWithIndex
+      .map { case (und, i) => (i, (und ++ und.map(_.swap)).distinct) }
+    val union = graphs.flatMap { case (i, sym) =>
+      sym.map { case (a, b) => (s"c$i.$a", s"c$i.$b") } }
+    val out = Graph.harmonicFrom(union.toDF("src", "dst").localCheckpoint())
+      .collect().map(r => r.getAs[String]("skill") ->
+        ((r.getAs[Long]("n_reached"), r.getAs[Long]("harm_num")))).toMap
+    graphs.foreach { case (i, sym) =>
       val adj = sym.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
       val nodes = sym.map(_._1).distinct
       def bfs(root: String): Map[String, Int] = {
@@ -642,16 +650,14 @@ class GeneratedInputsSpec extends AnyFunSuite {
         }
         dist - root
       }
-      val out = Graph.harmonicFrom(e).collect()
-        .map(r => r.getAs[String]("skill") ->
-          ((r.getAs[Long]("n_reached"), r.getAs[Long]("harm_num")))).toMap
       nodes.foreach { v =>
         val d = bfs(v)
         val expected = (d.size.toLong,
           d.values.map(Graph.HarmScale / _.toLong).sum)
-        assert(out(v) === expected, s"node $v of $sym")
+        assert(out(s"c$i.$v") === expected, s"node $v of $sym")
       }
     }
+    assert(out.size === graphs.map(_._2.map(_._1).distinct.size).sum)
   }
 
   test("winnowing fingerprints match a sequential sweep on generated token docs") {

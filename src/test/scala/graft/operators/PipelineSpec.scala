@@ -2,14 +2,19 @@ package graft.operators
 
 import java.nio.file.Files
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import graft.SharedSpark
 import graft.functions.Keys
 import graft.sources.JsonLake
 import graft.streaming.StreamingPipeline
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -181,5 +186,84 @@ class PipelineSpec extends AnyFunSuite {
     // bounds a few jobs above the measured 34 and 32
     assert(rebuild <= 38 && increment <= 36,
       s"Pipeline.run ran $rebuild jobs, loadBatch $increment")
+  }
+
+  private val InsertTarget =
+    "(?s)\\) Execute InsertIntoHadoopFsRelationCommand.*?Arguments: (?:file:)?([^\\s,]+)".r
+
+  /** The SQL executions `body` runs, as start and end events in bus
+    * order: (execution id, true at its start, the table it inserts into
+    * — the last segment of the target path — or ""). */
+  private def executionsOf(body: => Unit): Seq[(Long, Boolean, String)] = {
+    val sc = spark.sparkContext
+    val events = new ConcurrentLinkedQueue[(Long, Boolean, String)]
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => events.add((x.executionId, true,
+          InsertTarget.findFirstMatchIn(x.physicalPlanDescription)
+            .fold("")(_.group(1).stripSuffix("/").split('/').last)))
+        case x: SparkListenerSQLExecutionEnd => events.add((x.executionId, false, ""))
+        case _ =>
+      }
+    }
+    ListenerBridge.drain(sc)
+    sc.addSparkListener(l)
+    try { body; ListenerBridge.drain(sc); events.asScala.toSeq }
+    finally sc.removeSparkListener(l)
+  }
+
+  /** The most executions in flight at one time. */
+  private def peak(events: Seq[(Long, Boolean, String)]): Int =
+    events.scanLeft(0)((n, e) => if (e._2) n + 1 else n - 1).max
+
+  // The loaders run their steps as a dependency graph: steps that do not
+  // read each other's output run at once, and an increment writes no fact
+  // or bridge row before every dim it appends is written.
+  test("overlap and order guard: a load overlaps its executions, facts follow the dim appends") {
+    val lake = writeLake()
+    val out = Files.createTempDirectory("graft_pipe_overlap").toFile.getAbsolutePath
+    val rebuild = executionsOf(Pipeline.run(spark, lake, out))
+    val inc = Files.createTempDirectory("graft_pipe_overlap_inc").toFile.getAbsolutePath
+    val batch = JsonLake.readJson(spark, lake, Pipeline.offerSchema)
+    StreamingPipeline.loadBatch(batch, inc, 0L)
+    // new urls, sources, titles and companies: three fact dims grow
+    val grown = Seq("job_url", "titre", "via", "companie").foldLeft(batch)((df, c) =>
+      df.withColumn(c, concat(col(c), lit(" bis"))))
+    val increment = executionsOf(StreamingPipeline.loadBatch(grown, inc, 1L))
+    assert(peak(rebuild) >= 2 && peak(increment) >= 2,
+      s"at most ${peak(rebuild)} (rebuild) and ${peak(increment)} (increment) " +
+        "SQL executions ran at once")
+    val target = increment.collect { case (id, true, t) => id -> t }.toMap
+    val at = increment.zipWithIndex
+    val dimEnds = at.collect { case ((id, false, _), i) if target.get(id).exists(_.startsWith("dim_")) => i }
+    val factStarts = at.collect {
+      case ((_, true, t), i) if t == "fact_offre" || t == "offre_skill" => i
+    }
+    assert(dimEnds.size >= 3 && factStarts.size === 2,
+      s"${dimEnds.size} dim appends, ${factStarts.size} fact and bridge writes")
+    assert(factStarts.min > dimEnds.max,
+      "a fact or bridge write started before the last dim append ended")
+  }
+
+  test("a rebuild whose dim write fails throws that write's own error and leaves nothing running") {
+    val out = Files.createTempDirectory("graft_pipe_fail").toFile
+    // dim_titre links to a path under a regular file: no directory can
+    // be made there, so its write fails and every other write can run
+    val blocker = new java.io.File(out, "blocker")
+    assert(blocker.createNewFile())
+    Files.createSymbolicLink(new java.io.File(out, "dim_titre").toPath,
+      new java.io.File(blocker, "dim_titre").toPath)
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Exception](Pipeline.run(spark, writeLake(), out.getAbsolutePath))
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
+    assert(e.getMessage.contains(s"${out.getAbsolutePath}/dim_titre"), e.getMessage)
+    // the fact and bridge writes wait for every dim, so neither ran
+    assert(!new java.io.File(out, "fact_offre").exists() &&
+      !new java.io.File(out, "offre_skill").exists())
+    assert(new java.io.File(out, "dim_source").exists())
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cached).isEmpty,
+      "a failed Pipeline.run left a cached RDD behind")
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName == "graft-load-step"),
+      "a load thread outlived its load")
   }
 }

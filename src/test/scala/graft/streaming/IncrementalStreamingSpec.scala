@@ -255,6 +255,29 @@ class IncrementalStreamingSpec extends AnyFunSuite {
       Map("alpha" -> 1, "beta" -> 2, "gamma" -> 3))
   }
 
+  test("a failed dim append publishes no fact or bridge row of its batch") {
+    import graft.operators.Pipeline
+    import graft.sources.JsonLake
+    val out = Files.createTempDirectory("graft_fail_out").toString
+    def load(batchId: Long, lines: String*): Unit = {
+      val lake = Files.createTempDirectory("graft_fail_lake").toString
+      Files.write(Paths.get(lake, "b.jsonl"), lines.mkString("\n").getBytes)
+      StreamingPipeline.loadBatch(JsonLake.readJson(spark, lake, Pipeline.offerSchema),
+        out, batchId)
+    }
+    load(0L, offer("u1", "alpha"))
+    def rows(t: String) = spark.read.parquet(s"$out/$t").count()
+    val before = (rows("fact_offre"), rows("offre_skill"))
+    // reads skip `_` files, but the committer cannot make its staging
+    // directory where a regular file stands
+    Files.createFile(Paths.get(out, "dim_source", "_temporary"))
+    val e = intercept[Exception](load(1L, offer("u2", "gamma")))
+    assert(e.getMessage.contains(s"$out/dim_source"), e.getMessage)
+    assert((rows("fact_offre"), rows("offre_skill")) === before,
+      "a batch whose dim append failed published facts or bridge rows")
+    assert(ids(out, "dim_source", "value", "id_source") === Map("alpha" -> 1))
+  }
+
   test("exactly-once JDBC publish: two micro-batches, a replay, and a partial-failure retry") {
     import graft.operators.Pipeline
     import graft.sources.{JsonLake, Warehouse}

@@ -15,7 +15,9 @@ prints a progress line on stderr. At the end, for each end-to-end metric
 of the change's BENCHMARK.json, it prints each side's median and
 quartiles, the change's median as a ratio to the parent's, the parent's
 quartile spread, and the fraction of pairs the change won (ties count
-for neither side); then `fail_frac` per side, each side's median host
+for neither side); the same block again over only the quiet pairs, where
+both sides' steal is known and at most STEAL_PCT, with their count; then
+`fail_frac` per side, each side's median host
 steal, and one JSON line holding every sample. Each run's
 `host_steal_pct` (from run.py's `env` line: the share of the host's CPU
 time the hypervisor took during the run) is shown beside its metrics,
@@ -81,6 +83,29 @@ def end_to_end(checkout):
         return [(m["name"], m["better"]) for m in json.load(f)["end_to_end"]]
 
 
+def summarize(metrics, runs):
+    """Per end-to-end metric over (parent run, change run) pairs: each
+    side's median and quartiles, the ratio of the medians, the parent's
+    quartile spread and the change's win share."""
+    for name, better in metrics:
+        pairs = [(p["metrics"].get(name), c["metrics"].get(name))
+                 for p, c in runs]
+        pairs = [(p, c) for p, c in pairs if p is not None and c is not None]
+        if not pairs:
+            print(f"{name}: not measured")
+            continue
+        wins = sum(1 for p, c in pairs
+                   if (c < p if better == "lower" else c > p))
+        pq = quartiles([p for p, _ in pairs])
+        cq = quartiles([c for _, c in pairs])
+        ratio = cq[1] / pq[1] if pq[1] else float("nan")
+        print(f"{name}: parent median {pq[1]:.4g} [q1 {pq[0]:.4g}, "
+              f"q3 {pq[2]:.4g}]  change median {cq[1]:.4g} [q1 {cq[0]:.4g}, "
+              f"q3 {cq[2]:.4g}]  change/parent {ratio:.3f}  parent IQR "
+              f"{pq[2] - pq[0]:.4g}  change won {wins}/{len(pairs)} "
+              f"({wins / len(pairs):.2f}, {better} is better)")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("parent")
@@ -104,23 +129,15 @@ def main():
 
     print(f"workload {args.workload}, seed {args.seed}, {args.pairs} pairs "
           f"(run.py --seconds 8 --trace 0, alternating order)")
-    for name, better in end_to_end(sides["change"]):
-        pairs = [(p["metrics"].get(name), c["metrics"].get(name))
-                 for p, c in zip(runs["parent"], runs["change"])]
-        pairs = [(p, c) for p, c in pairs if p is not None and c is not None]
-        if not pairs:
-            print(f"{name}: not measured")
-            continue
-        wins = sum(1 for p, c in pairs
-                   if (c < p if better == "lower" else c > p))
-        pq = quartiles([p for p, _ in pairs])
-        cq = quartiles([c for _, c in pairs])
-        ratio = cq[1] / pq[1] if pq[1] else float("nan")
-        print(f"{name}: parent median {pq[1]:.4g} [q1 {pq[0]:.4g}, "
-              f"q3 {pq[2]:.4g}]  change median {cq[1]:.4g} [q1 {cq[0]:.4g}, "
-              f"q3 {cq[2]:.4g}]  change/parent {ratio:.3f}  parent IQR "
-              f"{pq[2] - pq[0]:.4g}  change won {wins}/{len(pairs)} "
-              f"({wins / len(pairs):.2f}, {better} is better)")
+    metrics = end_to_end(sides["change"])
+    both = list(zip(runs["parent"], runs["change"]))
+    summarize(metrics, both)
+    quiet = [(p, c) for p, c in both
+             if all(r["steal"] is not None and r["steal"] <= STEAL_PCT
+                    for r in (p, c))]
+    print(f"quiet pairs (both sides' host steal <= {STEAL_PCT:g}%): "
+          f"{len(quiet)}/{len(both)}")
+    summarize(metrics, quiet)
     for side in ("parent", "change"):
         fr = [r["metrics"].get("fail_frac") for r in runs[side]]
         failed = sum(1 for r in runs[side] if not r["ok"])
