@@ -87,12 +87,4 @@ object Text {
     transform(sequence(lit(0), lit(k - 1)),
       i => array_min(transform(shingles,
         sh => md5(concat(i.cast("string"), lit(":"), sh)))))
-
-  /** Banded LSH keys from a minhash signature: band b =
-    * md5(mh[b*rows+1 .. b*rows+rows] joined by ','). Explode the result
-    * with posexplode to get (band_id, band_hash) join keys.
-    */
-  def bandHashes(mh: Column, bands: Int, rows: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => md5(array_join(slice(mh, b * lit(rows) + lit(1), lit(rows)), ",")))
 }

@@ -4,7 +4,7 @@ import graft.Q
 import graft.functions.Text._
 import graft.functions.Vectors._
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -281,10 +281,7 @@ object Dedup {
 
   private def minhashBlocks(s: SparkSession, dir: String,
       cfg: SimilarityConfig): MinhashBlocks = {
-    val shr = Tables.documents(s, dir)
-      .select(col("doc_id"),
-        explode(array_distinct(
-          wordShingles(toks(col("text")), cfg.shingleWidth))).as("sh"))
+    val shr = shingleRows(Tables.documents(s, dir), cfg.shingleWidth)
     // NOTE (measured): localCheckpoint(shr) — to stop verify re-deriving
     // the shingle rows — regressed every best-of-3 percentile by
     // ~0.4-0.5 s at sf0.1 (JIT noise is ~±0.3 s, the shift was
@@ -294,17 +291,7 @@ object Dedup {
     // POST-aggregation frames (see Stats.tfidfTopTerms); recompute wins
     // for wide streaming passes (same lesson as SURVEY §7a's
     // persist()/semi-filter rejections).
-    // k minhashes from k/4 md5 evaluations: each salted md5's 32 hex
-    // chars split into four disjoint 8-char (32-bit) lanes; hex strings
-    // compare lexicographically as unsigned integers, so min-per-lane
-    // is a valid MinHash. md5 is the expensive op — 4x fewer calls;
-    // codegen's subexpression elimination shares each salt's digest
-    // across its four lanes.
-    val mhCols = (0 until cfg.minhashK).map { i =>
-      min(substring(md5(concat(lit(s"${i / 4}:"), col("sh"))),
-        (i % 4) * 8 + 1, 8)).as(s"mh$i")
-    } :+ count(lit(1)).as("n") // shingle-set size rides the same agg
-    val mh = shr.groupBy("doc_id").agg(mhCols.head, mhCols.tail: _*)
+    val mh = minhashOf(shr, cfg)
     val bandRows = bandRowsOf(mh, cfg)
     // Candidate pairs from grouped bucket membership rather than a
     // self-join: one signature pass instead of two (Spark recomputes
@@ -323,16 +310,47 @@ object Dedup {
     MinhashBlocks(shr, mh.select(col("doc_id"), col("n")), cand)
   }
 
+  /** Distinct `(doc_id, sh)` rows of a `(doc_id, text)` frame: one row
+    * per document and distinct word shingle of `width` tokens. A
+    * streaming explode with no checkpoint (see the note in
+    * [[minhashBlocks]]).
+    */
+  private def shingleRows(docs: DataFrame, width: Int): DataFrame =
+    docs.select(col("doc_id"),
+      explode(array_distinct(wordShingles(toks(col("text")), width)))
+        .as("sh"))
+
+  /** The MinHash signature of [[shingleRows]] rows: one `(doc_id, mh0
+    * .. mh{k-1}, n)` row per document, `n` its distinct-shingle count.
+    * k minhashes from k/4 md5 evaluations: each salted md5's 32 hex
+    * chars split into four disjoint 8-char (32-bit) lanes; hex strings
+    * compare lexicographically as unsigned integers, so min-per-lane
+    * is a valid MinHash. md5 is the expensive op — 4x fewer calls;
+    * codegen's subexpression elimination shares each salt's digest
+    * across its four lanes. One map-side-combined aggregate; no
+    * checkpoint (a caller that reads no `n` has it pruned away).
+    */
+  private def minhashOf(shr: DataFrame, cfg: SimilarityConfig): DataFrame = {
+    val mhCols = (0 until cfg.minhashK).map { i =>
+      min(substring(md5(concat(lit(s"${i / 4}:"), col("sh"))),
+        (i % 4) * 8 + 1, 8)).as(s"mh$i")
+    } :+ count(lit(1)).as("n")
+    shr.groupBy("doc_id").agg(mhCols.head, mhCols.tail: _*)
+  }
+
+  /** Band `b`'s LSH key over a signature frame: md5 of its
+    * [[SimilarityConfig.minhashRows]] minhash lanes joined by ','. */
+  private def bandHash(b: Int, cfg: SimilarityConfig): Column =
+    md5(concat_ws(",", (0 until cfg.minhashRows)
+      .map(r => col(s"mh${b * cfg.minhashRows + r}")): _*))
+
   /** (doc_id, band_id, band_hash) rows from a minhash-signature frame —
     * shared by the blocking stage and [[lshBucketStats]]. */
   private def bandRowsOf(mh: DataFrame, cfg: SimilarityConfig): DataFrame =
     mh.select(col("doc_id"),
       explode(array((0 until cfg.minhashBands).map(b =>
-        struct(lit(b).as("band_id"),
-          md5(concat_ws(",",
-            (0 until cfg.minhashRows)
-              .map(r => col(s"mh${b * cfg.minhashRows + r}")): _*))
-            .as("band_hash"))): _*)).as("bb"))
+        struct(lit(b).as("band_id"), bandHash(b, cfg).as("band_hash"))): _*))
+        .as("bb"))
       .select(col("doc_id"), col("bb.band_id").as("band_id"),
         col("bb.band_hash").as("band_hash"))
 
@@ -742,35 +760,20 @@ object Dedup {
     * actual dedup decision (pairs alone over-delete: a~b, b~c must keep
     * ONE of {a,b,c}, not two survivors).
     *
-    * Shape: iterative (join + min-aggregate) rounds, converging in
-    * O(component diameter) supersteps — near-dup components are tiny by
-    * construction, so 2-4 rounds in practice. Each round
+    * Shape ([[Graph.minLabelComponents]]): iterative (join +
+    * min-aggregate) rounds, converging in O(component diameter)
+    * supersteps — near-dup components are tiny by construction, so 2-4
+    * rounds in practice. Each round
     * `localCheckpoint`s to cut the growing lineage (the standard Spark
     * iterative-algorithm pattern); the per-round `count` is the
     * convergence test, not a data collect.
     */
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     val pairs = dedupMinhashLsh(s, dir).select(col("doc_a"), col("doc_b"))
-    val edges = pairs
-      .union(pairs.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst")
-      .localCheckpoint(true)
-    var labels = edges.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("l"))
-      .localCheckpoint(true)
-    var changed = 1L
-    while (changed > 0) {
-      val prop = edges.join(labels, edges("src") === labels("v"))
-        .select(col("dst").as("v"), col("l"))
-      val next = labels.union(prop)
-        .groupBy("v").agg(min(col("l")).as("l"))
-        .localCheckpoint(true)
-      changed = next.join(labels.withColumnRenamed("l", "l0"), "v")
-        .filter(col("l") =!= col("l0")).count()
-      labels = next
-    }
-    labels.select(col("v").as("doc_id"), col("l").as("cluster_id"),
-      (col("v") === col("l")).as("is_survivor"))
+    val edges = Graph.bothWays(pairs).localCheckpoint(true)
+    Graph.minLabelComponents(edges, edges.select(col("src").as("v")).distinct())
+      .select(col("v").as("doc_id"), col("l").as("cluster_id"),
+        (col("v") === col("l")).as("is_survivor"))
       .orderBy("doc_id")
   }
 
@@ -982,23 +985,11 @@ object Dedup {
     * to avoid re-reading. At k=16 lanes the estimator's std-err is
     * ~0.1; production tunes k via [[SimilarityConfig]].
     */
-  def signatureStore(docs: DataFrame, cfg: SimilarityConfig = D): DataFrame = {
-    val shr = docs.select(col("doc_id"),
-      explode(array_distinct(
-        wordShingles(toks(col("text")), cfg.shingleWidth))).as("sh"))
-    val mhCols = (0 until cfg.minhashK).map { i =>
-      min(substring(md5(concat(lit(s"${i / 4}:"), col("sh"))),
-        (i % 4) * 8 + 1, 8)).as(s"mh$i")
-    } :+ count(lit(1)).as("n")
-    shr.groupBy("doc_id").agg(mhCols.head, mhCols.tail: _*)
+  def signatureStore(docs: DataFrame, cfg: SimilarityConfig = D): DataFrame =
+    minhashOf(shingleRows(docs, cfg.shingleWidth), cfg)
       .select(col("doc_id") +: col("n") +:
-        (0 until cfg.minhashBands).map(b =>
-          md5(concat_ws(",",
-            (0 until cfg.minhashRows)
-              .map(r => col(s"mh${b * cfg.minhashRows + r}")): _*))
-            .as(s"band$b")) ++:
+        (0 until cfg.minhashBands).map(b => bandHash(b, cfg).as(s"band$b")) ++:
         (0 until cfg.minhashK).map(i => col(s"mh$i")): _*)
-  }
 
   /** Signature-level Jaccard estimate between two signature rows
     * (fraction of matching minhash lanes).
@@ -1179,10 +1170,7 @@ object Dedup {
   def dedupPrefixFilterOn(docs: DataFrame,
       cfg: SimilarityConfig): DataFrame = {
     val (p, q) = tauRational(cfg.minhashTau)
-    val shr = docs
-      .select(col("doc_id"),
-        explode(array_distinct(
-          wordShingles(toks(col("text")), cfg.shingleWidth))).as("sh"))
+    val shr = shingleRows(docs, cfg.shingleWidth)
     val freq = shr.groupBy("sh").agg(count(lit(1)).as("df"))
     val wRank = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("sh"))
     val wSz = Window.partitionBy(col("doc_id"))
@@ -1268,11 +1256,8 @@ object Dedup {
   val RecallCap = 200L
 
   def dedupLshRecall(s: SparkSession, dir: String): DataFrame = {
-    val shr = Tables.documents(s, dir)
-      .filter(col("doc_id") < RecallCap)
-      .select(col("doc_id"),
-        explode(array_distinct(
-          wordShingles(toks(col("text")), D.shingleWidth))).as("sh"))
+    val shr = shingleRows(
+      Tables.documents(s, dir).filter(col("doc_id") < RecallCap), D.shingleWidth)
     val cnt = shr.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = shr.as("a")
       .join(shr.as("b"),
@@ -1494,20 +1479,8 @@ object Dedup {
     * bucket-cardinality aggregates. (round 6)
     */
   def lshBucketStats(s: SparkSession, dir: String): DataFrame = {
-    val cfg = D
-    // the signature chain mirrors minhashBlocks (shingle -> salted md5
-    // lanes); duplicated here because the blocking stage fuses its
-    // shingle-count column into the same agg
-    val shr = Tables.documents(s, dir)
-      .select(col("doc_id"),
-        explode(array_distinct(
-          wordShingles(toks(col("text")), cfg.shingleWidth))).as("sh"))
-    val mhCols = (0 until cfg.minhashK).map { i =>
-      min(substring(md5(concat(lit(s"${i / 4}:"), col("sh"))),
-        (i % 4) * 8 + 1, 8)).as(s"mh$i")
-    }
-    val mh = shr.groupBy("doc_id").agg(mhCols.head, mhCols.tail: _*)
-    val buckets = bandRowsOf(mh, cfg)
+    val mh = minhashOf(shingleRows(Tables.documents(s, dir), D.shingleWidth), D)
+    val buckets = bandRowsOf(mh, D)
       .groupBy("band_id", "band_hash")
       .agg(count(lit(1)).as("sz"))
     buckets.groupBy("band_id")

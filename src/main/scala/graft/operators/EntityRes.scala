@@ -58,7 +58,7 @@ object EntityRes {
 
   /** Canonical entity assignment: connected components over the match
     * graph (min-name label propagation to convergence, lineage cut per
-    * round — the [[Dedup.dedupClusters]] machinery at entity
+    * round — [[Graph.minLabelComponents]], seeded with every name, at entity
     * cardinality), every name mapped to its cluster's minimum as the
     * canonical form. Names with no fuzzy match stay their own
     * canonical. Output also carries the listing count behind each
@@ -68,24 +68,9 @@ object EntityRes {
     val names = Tables.part(s, dir)
       .groupBy(col("p_name")).agg(count(lit(1)).as("n_listings"))
     val pairs = erBlockingMatch(s, dir).select(col("name_a"), col("name_b"))
-    val edges = pairs
-      .union(pairs.select(col("name_b"), col("name_a")))
-      .toDF("src", "dst")
-      .localCheckpoint(true)
-    var labels = names.select(col("p_name").as("v"))
-      .select(col("v"), col("v").as("l"))
-      .localCheckpoint(true)
-    var changed = 1L
-    while (changed > 0) {
-      val prop = edges.join(labels, edges("src") === labels("v"))
-        .select(col("dst").as("v"), col("l"))
-      val next = labels.union(prop)
-        .groupBy("v").agg(min(col("l")).as("l"))
-        .localCheckpoint(true)
-      changed = next.join(labels.withColumnRenamed("l", "l0"), "v")
-        .filter(col("l") =!= col("l0")).count()
-      labels = next
-    }
+    val edges = Graph.bothWays(pairs).localCheckpoint(true)
+    val labels = Graph.minLabelComponents(edges,
+      names.select(col("p_name").as("v")))
     names.join(labels, names("p_name") === labels("v"))
       .select(col("p_name").as("name"), col("l").as("canonical"),
         (col("p_name") === col("l")).as("is_canonical"),

@@ -35,6 +35,60 @@ object Graph {
   /** Unrolled power-iteration count. */
   val Iters = 3
 
+  /** The skill co-occurrence graph's undirected edge list: one
+    * `(skill_a, skill_b)` row per co-occurring skill pair
+    * ([[TextAnalysis.skillCoocPairs]], lower skill id first).
+    * Checkpointed: a compact post-aggregate frame that every graph key
+    * reads more than once (both [[bothWays]] legs, the triangle sides),
+    * so the corpus extraction chain runs once.
+    */
+  private[operators] def skillEdges(s: SparkSession, dir: String): DataFrame =
+    TextAnalysis.skillCoocPairs(s, dir)
+      .select(col("skill_a"), col("skill_b"))
+      .localCheckpoint()
+
+  /** Directed `(src, dst, ...)` edges of an undirected pair frame whose
+    * first two columns are the endpoints: every pair once as a→b and
+    * once as b→a, any further columns carried on both. No checkpoint of
+    * its own: it is a projection and a union over the caller's frame.
+    */
+  private[operators] def bothWays(pairs: DataFrame): DataFrame = {
+    val cs = pairs.columns.toSeq.map(col)
+    val (a, b, rest) = (cs(0), cs(1), cs.drop(2))
+    pairs.select(a.as("src") +: b.as("dst") +: rest: _*)
+      .union(pairs.select(b.as("src") +: a.as("dst") +: rest: _*))
+  }
+
+  /** Connected components by min-label propagation to convergence:
+    * every vertex of `seeds` (column `v`) starts labeled by itself;
+    * each round pushes labels along the directed `(src, dst)` `edges`
+    * (both directions present for an undirected graph), keeps each
+    * vertex's minimum label, and stops once a `count` of changed labels
+    * reads 0 — rounds = the largest component diameter. Returns one
+    * `(v, l)` row per vertex, `l` the least vertex of its component;
+    * a seed with no edge keeps its own label. Checkpoints: the seed
+    * labels and every round's labels are `localCheckpoint(true)`, which
+    * keeps the lineage one round deep; `edges` is read every round, so
+    * the caller checkpoints it.
+    */
+  private[operators] def minLabelComponents(edges: DataFrame,
+      seeds: DataFrame): DataFrame = {
+    var labels = seeds.select(col("v"), col("v").as("l"))
+      .localCheckpoint(true)
+    var changed = 1L
+    while (changed > 0) {
+      val prop = edges.join(labels, edges("src") === labels("v"))
+        .select(col("dst").as("v"), col("l"))
+      val next = labels.union(prop)
+        .groupBy("v").agg(min(col("l")).as("l"))
+        .localCheckpoint(true)
+      changed = next.join(labels.withColumnRenamed("l", "l0"), "v")
+        .filter(col("l") =!= col("l0")).count()
+      labels = next
+    }
+    labels
+  }
+
   /** r' = (15% * SCALE/|V|) + 85% * sum_in(r_u div deg_u), all in
     * integer arithmetic; damping 0.85 as the exact rational 85/100.
     *
@@ -56,20 +110,12 @@ object Graph {
     * same per-dst multisets, so results are bit-identical.
     */
   def pagerankSkills(s: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint 1: the pair list is the §7a checkpoint sweet spot
-    // — a compact post-agg frame consumed by both union legs; without
-    // it the e-build would run the corpus extraction chain twice
-    val cooc = TextAnalysis.skillCoocPairs(s, dir)
-      .select(col("skill_a"), col("skill_b"))
-      .localCheckpoint()
     // the dst repartition stays IN-PLAN (no checkpoint): localCheckpoint
     // drops outputPartitioning under AQE (probed r16), while an in-plan
     // exchange is visible to EnsureRequirements, so every sweep's
     // groupBy(dst) rides it and identical copies collapse via
     // ReusedExchange at runtime — the harmonicFrom discipline
-    val e = cooc.select(col("skill_a").as("src"), col("skill_b").as("dst"))
-      .union(cooc.select(col("skill_b").as("src"), col("skill_a").as("dst")))
-      .repartition(col("dst"))
+    val e = bothWays(skillEdges(s, dir)).repartition(col("dst"))
     val deg = e.groupBy(col("dst").as("skill"))
       .agg(count(lit(1)).as("deg"))
     val nV = deg.agg(count(lit(1)).as("nv"))
@@ -134,9 +180,7 @@ object Graph {
     val cooc = TextAnalysis.skillCoocPairs(s, dir)
       .select(col("skill_a"), col("skill_b"), col("n"))
       .localCheckpoint()
-    val e = cooc.select(col("skill_a").as("src"), col("skill_b").as("dst"), col("n"))
-      .union(cooc.select(col("skill_b").as("src"), col("skill_a").as("dst"), col("n")))
-      .repartition(col("dst"))
+    val e = bothWays(cooc).repartition(col("dst"))
     val wsum = e.groupBy(col("dst").as("skill"))
       .agg(sum(col("n")).as("w"))
     val nV = wsum.agg(count(lit(1)).as("nv"))
@@ -193,9 +237,7 @@ object Graph {
     * so wedge counts stay near-linear. (round 4)
     */
   def triangleCount(s: SparkSession, dir: String): DataFrame = {
-    val cooc = TextAnalysis.skillCoocPairs(s, dir)
-      .select(col("skill_a"), col("skill_b"))
-      .localCheckpoint()
+    val cooc = skillEdges(s, dir)
     val tri = cooc.as("e1")
       .join(cooc.as("e2"), col("e1.skill_b") === col("e2.skill_a"))
       .join(cooc.as("e3"),
@@ -270,11 +312,7 @@ object Graph {
   }
 
   def labelPropagation(s: SparkSession, dir: String): DataFrame = {
-    val cooc = TextAnalysis.skillCoocPairs(s, dir)
-      .select(col("skill_a"), col("skill_b"))
-      .localCheckpoint()
-    val e = cooc.select(col("skill_a").as("src"), col("skill_b").as("dst"))
-      .union(cooc.select(col("skill_b").as("src"), col("skill_a").as("dst")))
+    val e = bothWays(skillEdges(s, dir))
     // members is a comma-joined STRING, not array<string>: the oracle
     // harness sorts result frames through pandas, which cannot hash
     // array cells — no registered query may emit ArrayType/MapType
@@ -350,11 +388,7 @@ object Graph {
     * exact with no convergence ambiguity. (round 5)
     */
   def bfsHops(s: SparkSession, dir: String): DataFrame = {
-    val cooc = TextAnalysis.skillCoocPairs(s, dir)
-      .select(col("skill_a"), col("skill_b"))
-      .localCheckpoint()
-    val e = cooc.select(col("skill_a").as("src"), col("skill_b").as("dst"))
-      .union(cooc.select(col("skill_b").as("src"), col("skill_a").as("dst")))
+    val e = bothWays(skillEdges(s, dir))
     val seed = e.agg(min(col("src")).as("skill"))
       .select(col("skill"), lit(0L).as("dist"))
     bfsCore(e, seed).orderBy(col("dist"), col("skill"))
@@ -398,14 +432,8 @@ object Graph {
     * is bounded by vocab², never by corpus size; each sweep is one
     * frontier-edge equi-join. (round 7)
     */
-  def harmonicCentrality(s: SparkSession, dir: String): DataFrame = {
-    val cooc = TextAnalysis.skillCoocPairs(s, dir)
-      .select(col("skill_a"), col("skill_b"))
-      .localCheckpoint()
-    val e = cooc.select(col("skill_a").as("src"), col("skill_b").as("dst"))
-      .union(cooc.select(col("skill_b").as("src"), col("skill_a").as("dst")))
-    harmonicFrom(e)
-  }
+  def harmonicCentrality(s: SparkSession, dir: String): DataFrame =
+    harmonicFrom(bothWays(skillEdges(s, dir)))
 
   /** Core over any directed (src, dst) edge frame (spec hand-checks
     * a constructed path graph).
@@ -499,17 +527,15 @@ object Graph {
     * is the sanctioned 1-row scalar (m) broadcast.
     */
   def graphModularity(s: SparkSession, dir: String): DataFrame =
-    modularityOf(TextAnalysis.skillCoocPairs(s, dir)
-      .select(col("skill_a"), col("skill_b")))
+    modularityOf(skillEdges(s, dir))
 
   /** [[graphModularity]] over a caller-supplied undirected edge frame
     * (skill_a, skill_b), one row per edge — the constructed-graph spec
-    * hook.
+    * hook. The frame is read four times; a caller whose frame is
+    * expensive to recompute checkpoints it ([[skillEdges]] is).
     */
-  def modularityOf(coocRaw: DataFrame): DataFrame = {
-    val cooc = coocRaw.localCheckpoint()
-    val e = cooc.select(col("skill_a").as("src"), col("skill_b").as("dst"))
-      .union(cooc.select(col("skill_b").as("src"), col("skill_a").as("dst")))
+  def modularityOf(cooc: DataFrame): DataFrame = {
+    val e = bothWays(cooc)
     val lbl = lpaSweeps(e).localCheckpoint()
     val deg = e.groupBy(col("src").as("skill")).agg(count(lit(1)).as("deg"))
     val mem = lbl.join(deg, "skill")
@@ -593,14 +619,11 @@ object Graph {
     * no floats anywhere.
     */
   def kcoreMembership(s: SparkSession, dir: String): DataFrame =
-    kcoreFromPairs(TextAnalysis.skillCoocPairs(s, dir)
-      .select(col("skill_a"), col("skill_b"))
-      .localCheckpoint())
+    kcoreFromPairs(skillEdges(s, dir))
 
   /** Core over any undirected edge list (skill_a, skill_b), a < b. */
   def kcoreFromPairs(cooc: DataFrame): DataFrame = {
-    var e = cooc.select(col("skill_a").as("src"), col("skill_b").as("dst"))
-      .union(cooc.select(col("skill_b").as("src"), col("skill_a").as("dst")))
+    var e = bothWays(cooc)
     for (_ <- 1 to KCoreSweeps) {
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= KCoreK)
@@ -654,11 +677,7 @@ object Graph {
     * edge list); one edge-frame agg. (round 6)
     */
   def degreeAssortativity(s: SparkSession, dir: String): DataFrame = {
-    val cooc = TextAnalysis.skillCoocPairs(s, dir)
-      .select(col("skill_a"), col("skill_b"))
-      .localCheckpoint()
-    val e = cooc.select(col("skill_a").as("src"), col("skill_b").as("dst"))
-      .union(cooc.select(col("skill_b").as("src"), col("skill_a").as("dst")))
+    val e = bothWays(skillEdges(s, dir))
     val deg = e.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
     val pairs = e
       .join(broadcast(deg.select(col("n").as("src"), col("d").as("dx"))), "src")
@@ -724,11 +743,8 @@ object Graph {
     * triangle_count shape; node frames are graph-sized. (round 6)
     */
   def clusteringCoefficient(s: SparkSession, dir: String): DataFrame = {
-    val cooc = TextAnalysis.skillCoocPairs(s, dir)
-      .select(col("skill_a"), col("skill_b"))
-      .localCheckpoint() // feeds the degree table AND three tri sides
-    val e = cooc.select(col("skill_a").as("src"), col("skill_b").as("dst"))
-      .union(cooc.select(col("skill_b").as("src"), col("skill_a").as("dst")))
+    val cooc = skillEdges(s, dir) // feeds the degree table AND three tri sides
+    val e = bothWays(cooc)
     val deg = e.groupBy(col("src").as("skill")).agg(count(lit(1)).as("deg"))
     val tri = cooc.as("e1")
       .join(cooc.as("e2"), col("e1.skill_b") === col("e2.skill_a"))
@@ -788,11 +804,8 @@ object Graph {
     * chain. (round 6)
     */
   def jaccardNeighbors(s: SparkSession, dir: String): DataFrame = {
-    val cooc = TextAnalysis.skillCoocPairs(s, dir)
-      .select(col("skill_a"), col("skill_b"))
-      .localCheckpoint()
-    val e = cooc.select(col("skill_a").as("src"), col("skill_b").as("dst"))
-      .union(cooc.select(col("skill_b").as("src"), col("skill_a").as("dst")))
+    val cooc = skillEdges(s, dir)
+    val e = bothWays(cooc)
     val deg = e.groupBy(col("src").as("z")).agg(count(lit(1)).as("deg"))
     val wedges = e.as("l").join(e.as("r"), col("l.dst") === col("r.src"))
       .filter(col("l.src") < col("r.dst"))
@@ -849,8 +862,8 @@ object Graph {
     * partition under every other key here ("is this one job market or
     * several disconnected ones"; [[labelPropagation]] finds dense
     * communities WITHIN a component — this finds the components):
-    * min-label propagation to convergence (the
-    * [[Dedup.dedupClusters]] machinery on the vocab graph — each sweep
+    * min-label propagation to convergence ([[minLabelComponents]],
+    * shared with [[Dedup.dedupClusters]], on the vocab graph — each sweep
     * one |E| equi-join + a min-agg, state |V|-bounded, localCheckpoint
     * per sweep cuts lineage), component labeled by its
     * lexicographically-least skill, size attached by one broadcast
@@ -858,27 +871,9 @@ object Graph {
     * by the vocab graph's size, never the corpus. (round 9)
     */
   def graphComponents(s: SparkSession, dir: String): DataFrame = {
-    val cooc = TextAnalysis.skillCoocPairs(s, dir)
-      .select(col("skill_a"), col("skill_b"))
-      .localCheckpoint()
-    val edges = cooc
-      .union(cooc.select(col("skill_b"), col("skill_a")))
-      .toDF("src", "dst")
-      .localCheckpoint(true)
-    var labels = edges.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("l"))
-      .localCheckpoint(true)
-    var changed = 1L
-    while (changed > 0) {
-      val prop = edges.join(labels, edges("src") === labels("v"))
-        .select(col("dst").as("v"), col("l"))
-      val next = labels.union(prop)
-        .groupBy("v").agg(min(col("l")).as("l"))
-        .localCheckpoint(true)
-      changed = next.join(labels.withColumnRenamed("l", "l0"), "v")
-        .filter(col("l") =!= col("l0")).count()
-      labels = next
-    }
+    val edges = bothWays(skillEdges(s, dir)).localCheckpoint(true)
+    val labels = minLabelComponents(edges,
+      edges.select(col("src").as("v")).distinct())
     val sizes = labels.groupBy("l").agg(count(lit(1)).as("comp_size"))
     labels.join(broadcast(sizes), Seq("l"))
       .select(col("v").as("skill"), col("l").as("component_id"),

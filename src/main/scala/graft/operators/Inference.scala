@@ -353,9 +353,7 @@ object Inference {
     * then an anti-join against existing edges; degree table broadcast.
     */
   def linkPredictionRa(s: SparkSession, dir: String): DataFrame =
-    linkPredictionFromPairs(TextAnalysis.skillCoocPairs(s, dir)
-      .select(col("skill_a"), col("skill_b"))
-      .localCheckpoint())
+    linkPredictionFromPairs(Graph.skillEdges(s, dir))
 
   /** Core over any undirected edge list (skill_a, skill_b), a < b.
     *
@@ -370,8 +368,7 @@ object Inference {
     * streams map-side into the (x, y) aggregate.
     */
   def linkPredictionFromPairs(cooc: DataFrame): DataFrame = {
-    val e = cooc.select(col("skill_a").as("src"), col("skill_b").as("dst"))
-      .union(cooc.select(col("skill_b").as("src"), col("skill_a").as("dst")))
+    val e = Graph.bothWays(cooc)
     val deg = e.groupBy(col("src").as("z")).agg(count(lit(1)).as("deg"))
     val wedges = e.as("l").join(broadcast(e.as("r")),
         col("l.dst") === col("r.src"))
@@ -1130,15 +1127,7 @@ object Inference {
     * observed days.
     */
   def seasonalityDow(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val daily = ev.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-    val spine = ev
-      .agg(to_date(min(col("ts"))).as("lo"), to_date(max(col("ts"))).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("day"))
-    val filled = broadcast(spine).join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("n"), lit(0L)).as("n"))
-    val byDow = filled
+    val byDow = filledDays(s, dir)
       .groupBy((expr("weekday(day)") + 1).as("iso_dow"))
       .agg(count(lit(1)).as("n_days"), sum(col("n")).as("n_events"))
     val tot = byDow.agg(sum(col("n_days")).as("td"), sum(col("n_events")).as("te"))
@@ -1171,11 +1160,14 @@ object Inference {
                 / CAST(b.n_days * t.te AS DOUBLE) AS seasonal_index
        FROM bydow b CROSS JOIN tot t ORDER BY iso_dow"""
 
-  /** Zero-filled daily event-count series with an integer day index —
-    * shared input of the trend operators ([[acfDaily]],
-    * [[mannKendallTrend]], [[theilSenSlope]]). Calendar-bounded: the
-    * frame is |span| rows no matter the event volume. */
-  private def dailySeries(s: SparkSession, dir: String): DataFrame = {
+  /** The zero-filled daily event counts over the calendar spine: one
+    * `(day, lo, n)` row per calendar day from `lo`, the first event's
+    * day, to the last event's day, with `n` that day's event count (0
+    * on a silent day). Calendar-bounded: the frame is |span| rows no
+    * matter the event volume. Shared input of every single-series
+    * daily operator. It takes no checkpoint: each caller projects
+    * what it reads and keeps its own checkpoint choice. */
+  private def filledDays(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val daily = ev.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n"))
@@ -1184,10 +1176,17 @@ object Inference {
       .select(explode(sequence(col("lo"), col("hi"))).as("day"),
         col("lo"))
     broadcast(spine).join(daily, Seq("day"), "left")
-      .select(datediff(col("day"), col("lo")).cast("long").as("di"),
-        coalesce(col("n"), lit(0L)).as("n"))
-      .localCheckpoint()
+      .select(col("day"), col("lo"), coalesce(col("n"), lit(0L)).as("n"))
   }
+
+  /** [[filledDays]] as `(di, n)` with the integer day index di = day −
+    * lo, checkpointed — the input of the trend operators
+    * ([[mannKendallTrend]], [[theilSenSlope]], [[runsTest]], ...). */
+  private def dailySeries(s: SparkSession, dir: String): DataFrame =
+    filledDays(s, dir)
+      .select(datediff(col("day"), col("lo")).cast("long").as("di"),
+        col("n"))
+      .localCheckpoint()
 
   /** SQL twin of [[dailySeries]] as a WITH-clause body. */
   private val sqlDailySeries: String =
@@ -1342,14 +1341,7 @@ object Inference {
     * identical one-sqrt double expression in both engines.
     */
   def acfDaily(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val daily = ev.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-    val spine = ev
-      .agg(to_date(min(col("ts"))).as("lo"), to_date(max(col("ts"))).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("day"))
-    val filled = broadcast(spine).join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("n"), lit(0L)).as("n"))
+    val filled = filledDays(s, dir).select(col("day"), col("n"))
       .localCheckpoint()
     val lagged = filled.select(col("day").as("lday"), col("n").as("y"))
     val pairs = filled
@@ -1542,16 +1534,9 @@ object Inference {
     * means surface as single double divisions.
     */
   def cusumChangepoint(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val daily = ev.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-    val spine = ev
-      .agg(to_date(min(col("ts"))).as("lo"), to_date(max(col("ts"))).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("day"),
-        col("lo"))
-    val filled = broadcast(spine).join(daily, Seq("day"), "left")
+    val filled = filledDays(s, dir)
       .select(col("day"), (datediff(col("day"), col("lo")) + 1).cast("long").as("t"),
-        coalesce(col("n"), lit(0L)).as("n"))
+        col("n"))
     val tot = filled.agg(max(col("t")).as("tt"), sum(col("n")).as("c"))
     Keys.prefixSums(filled, Nil, year(col("day")), Seq(col("day")), Seq("n"))
       .crossJoin(broadcast(tot))
@@ -2987,15 +2972,8 @@ object Inference {
     * corpus-bounded; everything else is 7-row aggregates. (round 9)
     */
   def seasonalMannKendall(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val daily = ev.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-    val spine = ev
-      .agg(to_date(min(col("ts"))).as("lo"), to_date(max(col("ts"))).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("day"))
-    val ser = broadcast(spine).join(daily, Seq("day"), "left")
-      .select((expr("weekday(day)") + 1).as("iso_dow"), col("day"),
-        coalesce(col("n"), lit(0L)).as("n"))
+    val ser = filledDays(s, dir)
+      .select((expr("weekday(day)") + 1).as("iso_dow"), col("day"), col("n"))
       .localCheckpoint() // span-sized; feeds pairs both sides + ties
     val sStat = ser.as("a").join(ser.as("b"),
         col("b.iso_dow") === col("a.iso_dow") && col("b.day") > col("a.day"))
@@ -3124,14 +3102,7 @@ object Inference {
     * machinery; everything after is maxlag rows. (round 9)
     */
   def ljungBox(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val daily = ev.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-    val spine = ev
-      .agg(to_date(min(col("ts"))).as("lo"), to_date(max(col("ts"))).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("day"))
-    val filled = broadcast(spine).join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("n"), lit(0L)).as("n"))
+    val filled = filledDays(s, dir).select(col("day"), col("n"))
       .localCheckpoint() // feeds pairs both sides + the T scalar
     val lagged = filled.select(col("day").as("lday"), col("n").as("y"))
     val pairs = filled
@@ -3246,15 +3217,8 @@ ${(1 to AcfMaxLag).map { mm =>
     * 1-row moment frame; TakeOrdered top-1. (round 9)
     */
   def grubbsMaxDay(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val daily = ev.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-    val spine = ev
-      .agg(to_date(min(col("ts"))).as("lo"), to_date(max(col("ts"))).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("day"), col("lo"))
-    val ser = broadcast(spine).join(daily, Seq("day"), "left")
-      .select(datediff(col("day"), col("lo")).cast("long").as("di"),
-        coalesce(col("n"), lit(0L)).as("n"))
+    val ser = filledDays(s, dir)
+      .select(datediff(col("day"), col("lo")).cast("long").as("di"), col("n"))
     val mom = ser.agg(count(lit(1)).as("t"),
       sum(col("n").cast("decimal(19,0)")).cast("decimal(38,0)").as("sx"),
       sum(col("n").cast("decimal(19,0)") * col("n").cast("decimal(19,0)"))
@@ -3318,14 +3282,7 @@ ${(1 to AcfMaxLag).map { mm =>
     * (round 9)
     */
   def seasonalDecomposeDow(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val daily = ev.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-    val spine = ev
-      .agg(to_date(min(col("ts"))).as("lo"), to_date(max(col("ts"))).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("day"))
-    val filled = broadcast(spine).join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("n"), lit(0L)).as("n"))
+    val filled = filledDays(s, dir).select(col("day"), col("n"))
       .localCheckpoint() // feeds the window join twice (center + member)
     val member = filled.select(col("day").as("mday"), col("n").as("mn"))
     val win = filled

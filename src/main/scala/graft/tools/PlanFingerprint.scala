@@ -21,6 +21,13 @@ import org.apache.spark.sql.DataFrame
   * Regenerate after an INTENTIONAL plan change with:
   * `sbt "runMain graft.tools.PlanFingerprint"` (rewrites the resource
   * file in-place; review the diff like any other plan review).
+  *
+  * With registered key names as arguments
+  * (`sbt "runMain graft.tools.PlanFingerprint dedup_clusters ..."`) it
+  * prints `<sf> <key> <md5>` for those keys at every scale present —
+  * the unpinned correctness scale sf0.01 included — and leaves the pin
+  * file untouched: run it on a refactor's parent and on the change,
+  * then diff the two outputs to show no plan moved.
   */
 object PlanFingerprint {
 
@@ -60,6 +67,13 @@ object PlanFingerprint {
       "sf3.0f32" -> repo("testdata/sf3.0f32"))
       .filter { case (_, d) => new java.io.File(d).exists() }
   }
+
+  /** [[Sfs]] plus the unpinned correctness scale sf0.01, which sits
+    * beside sf0.001 and sf0.1, for the named-keys mode. */
+  private def namedSfs: Seq[(String, String)] =
+    (Sfs.take(1).map { case (_, d) =>
+      "sf0.01" -> java.nio.file.Paths.get(d).resolveSibling("sf0.01").toString
+    } ++ Sfs).filter { case (_, d) => new java.io.File(d).exists() }
 
   def shape(df: DataFrame): String = {
     import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
@@ -124,18 +138,25 @@ object PlanFingerprint {
 
   /** Regenerate the committed file from the current plans. Pins for SFs
     * whose data is absent on this checkout (e.g. the gitignored sf1.0)
-    * are carried over from the existing file, never silently dropped. */
+    * are carried over from the existing file, never silently dropped.
+    * Given key names, only print their fingerprints. */
   def main(args: Array[String]): Unit = {
     val spark = graft.Graft.session()
-    val cur = current(spark)
-    val have = Sfs.map(_._1).toSet
-    val kept = committed().filter { case ((sf, _), _) => !have(sf) }
-    val all = kept ++ cur
-    val out = all.toSeq.sortBy { case ((sf, n), _) => (sf, n) }
-      .map { case ((sf, n), h) => s"$sf $n $h" }
-      .mkString("", "\n", "\n")
-    java.nio.file.Files.write(pinFile.toPath, out.getBytes("UTF-8"))
-    println(s"wrote ${cur.size} fingerprints (+${kept.size} carried) to $pinFile")
+    if (args.nonEmpty) {
+      val qs = args.toSeq.map(graft.Registry.byName)
+      for ((label, dir) <- namedSfs; q <- qs)
+        println(s"$label ${q.name} ${hash(q.fn(spark, dir))}")
+    } else {
+      val cur = current(spark)
+      val have = Sfs.map(_._1).toSet
+      val kept = committed().filter { case ((sf, _), _) => !have(sf) }
+      val all = kept ++ cur
+      val out = all.toSeq.sortBy { case ((sf, n), _) => (sf, n) }
+        .map { case ((sf, n), h) => s"$sf $n $h" }
+        .mkString("", "\n", "\n")
+      java.nio.file.Files.write(pinFile.toPath, out.getBytes("UTF-8"))
+      println(s"wrote ${cur.size} fingerprints (+${kept.size} carried) to $pinFile")
+    }
     spark.stop()
   }
 }

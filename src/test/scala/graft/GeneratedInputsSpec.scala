@@ -457,16 +457,32 @@ class GeneratedInputsSpec extends AnyFunSuite {
       cnts <- Gen.listOfN(m, Gen.choose(1L, 3L))
     } yield ws.zip(cnts).toMap // map dedups words; counts arbitrary
 
-    sample(corpusGen, 40).foreach { corpus =>
-      val df = corpus.toSeq.toDF("w", "wc")
+    // each corpus's Spark jobs are a few tiny stages, so the suite time
+    // is scheduling latency: run the corpora on a fixed pool of 4
+    // threads, then assert on this thread in corpus order
+    val corpora = sample(corpusGen, 40)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val runs = try {
+      val fs = corpora.map { corpus =>
+        val df = corpus.toSeq.toDF("w", "wc")
+        scala.concurrent.Future {
+          val gotMerges = TextAnalysis.bpeTrainMergesFrom(df).collect()
+            .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs"),
+              r.getAs[Long]("pair_weight"))).toList
+          val gotSegs = TextAnalysis.bpeEncodeWordsFrom(df).collect()
+            .map(r => r.getAs[String]("w") ->
+              r.getAs[String]("encoded").split(" ").toList).toMap
+          (gotMerges, gotSegs)
+        }
+      }
+      scala.concurrent.Await.result(scala.concurrent.Future.sequence(fs),
+        scala.concurrent.duration.Duration.Inf)
+    } finally pool.shutdown()
+    corpora.zip(runs).foreach { case (corpus, (gotMerges, gotSegs)) =>
       val (refMerges, refSegs) = refBpe(corpus, TextAnalysis.BpeMerges)
-      val gotMerges = TextAnalysis.bpeTrainMergesFrom(df).collect()
-        .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs"),
-          r.getAs[Long]("pair_weight"))).toList
       assert(gotMerges === refMerges, s"merges diverged on $corpus")
-      val gotSegs = TextAnalysis.bpeEncodeWordsFrom(df).collect()
-        .map(r => r.getAs[String]("w") ->
-          r.getAs[String]("encoded").split(" ").toList).toMap
       assert(gotSegs === refSegs.map { case (w, ss) => w -> ss },
         s"encodings diverged on $corpus")
     }

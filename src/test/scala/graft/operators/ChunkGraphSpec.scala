@@ -293,6 +293,31 @@ class ChunkGraphSpec extends AnyFunSuite {
     assert(out("n4") === 4L)
   }
 
+  test("minLabelComponents equals union-find: long path, triangle, edgeless seed") {
+    import spark.implicits._
+    // a 6-node path whose least label travels five hops (several
+    // rounds), a separate triangle, and a seed vertex with no edge —
+    // EntityRes's unmatched name, which keeps its own label
+    val pairs = Seq("p5" -> "p4", "p4" -> "p3", "p3" -> "p2", "p2" -> "p1",
+      "p1" -> "p0", "t1" -> "t2", "t2" -> "t3", "t3" -> "t1")
+    val seeds = (pairs.flatMap { case (a, b) => Seq(a, b) } :+ "solo").distinct
+    // sequential union-find; the lesser root wins, so a set's root is
+    // its least member — the component label the loop converges to
+    val parent = scala.collection.mutable.Map(seeds.map(v => v -> v): _*)
+    def find(v: String): String =
+      if (parent(v) == v) v else { val r = find(parent(v)); parent(v) = r; r }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val ref = seeds.map(v => v -> find(v)).toMap
+    val edges = Graph.bothWays(pairs.toDF("a", "b"))
+    val out = Graph.minLabelComponents(edges, seeds.toDF("v")).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(out === ref)
+    assert(out("p5") === "p0" && out("t2") === "t1" && out("solo") === "solo")
+  }
+
   test("harmonic centrality: exact LCM-lattice sums on a path graph") {
     import spark.implicits._
     // path a-b-c-d: C_H(a) = 1/1 + 1/2 + 1/3 = 22/12; interior
