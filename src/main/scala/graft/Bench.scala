@@ -88,7 +88,7 @@ object Bench {
           f""""shuffle_write_mb":${m.shuffleWriteBytes / mb}%.2f,""" +
           s""""shuffle_write_records":${m.shuffleWriteRecords},""" +
           f""""spill_mb":${m.spillBytes / mb}%.2f,""" +
-          s""""gc_ms":${m.gcTimeMs},""" +
+          s""""gc_ms":${m.gcTimeMs},"compiles":${m.compiles},""" +
           f""""task_spread":${m.taskSpread}%.2f,""" +
           f""""build_ms":${t.buildMs}%.1f,"plan_ms":${t.planMs}%.1f}"""
       }

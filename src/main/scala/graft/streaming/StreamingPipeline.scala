@@ -1,10 +1,13 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.{DataQuality, Pipeline, SkillExtract}
 import graft.sources.{JsonLake, ManifestLog, Warehouse}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.LongType
 
 /** The reference's INCREMENTAL load path as a stream: scraper JSON
   * lands in the lake, each micro-batch cleans + enriches and upserts
@@ -26,6 +29,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * them kept on purpose. Cross-batch offer dedup is the streaming dedup
   * operator's job ([[Streaming.dedupStream]] shape) — within a batch,
   * `Pipeline.clean` dedups by job_url.
+  *
+  * Compiled code is reused across batches only if the plans repeat.
+  * Every [[runOnce]] runs its batch on a clone of the caller's session,
+  * and the JVM-wide codegen cache is keyed on the generated code (see
+  * [[graft.Graft]] for the confs that keep the clone's classes cached).
+  * So no per-batch value (the `batchId`, a count, a max id) may appear
+  * as a literal in a load's plan: each new value is new code, and one
+  * `lit(batchId)` made every increment compile a class again. Such a
+  * value travels as data, as the gate's `load_audit` rows do.
   */
 object StreamingPipeline {
 
@@ -70,10 +82,12 @@ object StreamingPipeline {
     * twice.
     *
     * Every batch is CONSTRAINT-GATED (the Deequ pattern,
-    * [[DataQuality.constraintSuite]]): the expectation report, computed
-    * once, is always appended to `load_audit`; if any expectation fails,
-    * the batch is diverted to `rejected_batches` and the warehouse is
-    * NOT touched — fail the load, never publish a corrupt snapshot.
+    * [[DataQuality.constraintSuite]]): the expectation report, one row
+    * per check, is collected once, the verdict is taken from those rows
+    * on the driver, and they are always appended to `load_audit` with
+    * the `batch_id`; if any expectation fails, the batch is diverted to
+    * `rejected_batches` and the warehouse is NOT touched — fail the
+    * load, never publish a corrupt snapshot.
     *
     * The load runs as [[Pipeline]]'s step graph, so what a crash leaves
     * behind is stated by its two ordering rules, not by the order of
@@ -87,13 +101,22 @@ object StreamingPipeline {
       : Unit = Pipeline.withOffers(batch)((cleaned, bad) =>
     Pipeline.materializing(keep => Pipeline.inSteps { step =>
       val offers = step(keep(cleaned))
-      val gate = step {
-        val report = keep(DataQuality.constraintSuite(offers(), checks)
-          .withColumn("batch_id", lit(batchId)))
-        (report, report.filter(!col("passed")).isEmpty)
+      // one row per check, collected: the verdict is decided here and
+      // the audit is written from a local frame, so `batchId` is never
+      // a literal in a plan
+      val report = step {
+        val r = DataQuality.constraintSuite(offers(), checks)
+        (r.collect().toSeq, r.schema)
       }
-      val passed = () => gate()._2
-      step(gate()._1.write.mode("append").parquet(s"$outDir/load_audit"))
+      val passed = () => report()._1.forall(_.getAs[Boolean]("passed"))
+      step {
+        val (rows, schema) = report()
+        batch.sparkSession.createDataFrame(
+          rows.map(r => Row.fromSeq(r.toSeq :+ batchId)).asJava,
+          schema.add("batch_id", LongType, nullable = false))
+          // a local frame gives each row a task: one file per batch
+          .coalesce(1).write.mode("append").parquet(s"$outDir/load_audit")
+      }
       step(if (!passed()) offers().write.mode("append").parquet(s"$outDir/rejected_batches"))
       step { passed(); bad.write.mode("append").json(s"$outDir/quarantine") }
       val links = step(keep(Pipeline.offerSkills(offers(),

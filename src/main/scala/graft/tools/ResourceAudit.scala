@@ -2,6 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -15,7 +16,8 @@ import org.apache.spark.sql.SparkSession
   * end). The reference ships Prometheus node/container monitoring
   * (reference: prometheus.yml:1); a query engine's equivalent is
   * per-query task metrics, which Spark already accumulates — this just
-  * scopes them to one action.
+  * scopes them to one action. `compiles` counts the generated classes
+  * Janino compiled while the action ran (a codegen-cache miss each).
   */
 final case class ResourceMetrics(
     tasks: Long,
@@ -28,7 +30,8 @@ final case class ResourceMetrics(
     shuffleWriteBytes: Long,
     shuffleWriteRecords: Long,
     spillBytes: Long,
-    gcTimeMs: Long) {
+    gcTimeMs: Long,
+    compiles: Long) {
 
   /** Straggler factor: slowest task vs the mean task — the number a
     * 1000-executor cluster's wall clock is hostage to (1.0 = perfectly
@@ -46,7 +49,9 @@ object ResourceAudit {
     * co-mingle neighbors — use from serial paths like Bench/audits).
     * The listener bus is drained before the snapshot, so the action's
     * final tasks are never undercounted; the drain happens OUTSIDE any
-    * caller timing of `action` itself.
+    * caller timing of `action` itself. `compiles` is the difference of
+    * the JVM-wide `CodegenMetrics` compile count around `action`, so it
+    * has the same serial-use scope.
     */
   def measure[T](spark: SparkSession)(action: => T): (T, ResourceMetrics) = {
     val tasks, taskTime, peakTask, inBytes, inRecs, srBytes, srRecs,
@@ -78,12 +83,14 @@ object ResourceAudit {
     // the 'deterministic per (plan, data)' claim to hold.
     org.apache.spark.graftbridge.ListenerBridge.drain(sc)
     sc.addSparkListener(listener)
+    val compiledBefore = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     try {
       val result = action
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiledBefore
       org.apache.spark.graftbridge.ListenerBridge.drain(sc)
       (result, ResourceMetrics(tasks.get, taskTime.get, peakTask.get,
         inBytes.get, inRecs.get, srBytes.get, srRecs.get,
-        swBytes.get, swRecs.get, spill.get, gcMs.get))
+        swBytes.get, swRecs.get, spill.get, gcMs.get, compiled))
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -34,6 +34,8 @@ class BenchSpec extends AnyFunSuite {
     assert(line.get("failed").size === 2)
     val res = line.get("resources").get("q1_agg")
     assert(res.get("build_ms").asDouble >= 0.0 && res.get("plan_ms").asDouble > 0.0)
+    // warmed up on the same scale, the audited pass finds its code cached
+    assert(res.get("compiles").asLong === 0L)
   }
 
   test("q.fn runs once for the warm-up and once per timed pass, fingerprint included") {

@@ -12,6 +12,7 @@ import graft.functions.Keys
 import graft.sources.JsonLake
 import graft.streaming.StreamingPipeline
 import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
   SparkListenerSQLExecutionStart}
@@ -186,6 +187,20 @@ class PipelineSpec extends AnyFunSuite {
     // bounds a few jobs above the measured 34 and 32
     assert(rebuild <= 38 && increment <= 36,
       s"Pipeline.run ran $rebuild jobs, loadBatch $increment")
+  }
+
+  test("compile guard: a second rebuild of a lake of the same shape compiles no class") {
+    def compiled(load: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      load
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    def rebuild() = compiled(Pipeline.run(spark, writeLake(),
+      Files.createTempDirectory("graft_pipe_codegen").toFile.getAbsolutePath))
+    val first = rebuild()
+    val second = rebuild()
+    info(s"classes compiled: $first by the first rebuild, $second by the second")
+    assert(second === 0L)
   }
 
   private val InsertTarget =

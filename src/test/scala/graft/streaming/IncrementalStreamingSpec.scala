@@ -211,6 +211,25 @@ class IncrementalStreamingSpec extends AnyFunSuite {
     spark.read.parquet(s"$out/$dim").collect()
       .map(r => r.getAs[String](key) -> r.getAs[Int](id)).toMap
 
+  test("compile guard: an increment of a shape already loaded compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val lake = Files.createTempDirectory("graft_cg_lake").toString
+    val out = Files.createTempDirectory("graft_cg_out").toString
+    val ckpt = Files.createTempDirectory("graft_cg_ckpt").toString
+    // every file has one shape: two offers of a new source, one corrupt
+    // line; from the second on, each grows dim_source alone
+    val compiled = Seq("alpha", "beta", "gamma").map { via =>
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      land(lake, out, ckpt, via)(offer(s"$via-1", via), offer(s"$via-2", via),
+        "{\"job_url\": broken")
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    info(s"classes compiled per increment: ${compiled.mkString(", ")}")
+    assert(compiled.last === 0L)
+    assert(spark.read.parquet(s"$out/fact_offre").count() === 6)
+    assert(spark.read.text(s"$out/quarantine").count() === 3)
+  }
+
   test("stacked get-or-create: one string in three dims gets each dim's own next id") {
     val lake = Files.createTempDirectory("graft_sd_lake").toString
     val out = Files.createTempDirectory("graft_sd_out").toString
@@ -378,15 +397,18 @@ class IncrementalStreamingSpec extends AnyFunSuite {
   test("constraint gate audits every batch and refuses to publish on failure") {
     import graft.operators.{DataQuality, Pipeline}
     import graft.sources.JsonLake
-    import org.apache.spark.sql.types.{StringType, StructField}
+    import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField}
     def offer(url: String): String =
       s"""{"job_url":"$url","titre":"t","via":"alpha","publication_date":"2024-03-05","description":"hash join data","contrat":"CDI","companie":"Acme","niveau_etudes":"Master","niveau_experience":"junior"}"""
-    val lake = Files.createTempDirectory("graft_gate_lake").toString
-    val w = new java.io.PrintWriter(s"$lake/b.jsonl")
-    w.println(offer("u1")); w.println(offer("u2")); w.close()
     val schema = Pipeline.offerSchema
       .add(StructField(JsonLake.CorruptCol, StringType, nullable = true))
-    val batch = spark.read.schema(schema).json(lake)
+    def lakeOf(urls: String*) = {
+      val lake = Files.createTempDirectory("graft_gate_lake").toString
+      val w = new java.io.PrintWriter(s"$lake/b.jsonl")
+      urls.foreach(u => w.println(offer(u))); w.close()
+      spark.read.schema(schema).json(lake)
+    }
+    val batch = lakeOf("u1", "u2")
 
     // healthy batch: audit row per check, all passed, star published
     val okOut = Files.createTempDirectory("graft_gate_ok").toString
@@ -399,6 +421,14 @@ class IncrementalStreamingSpec extends AnyFunSuite {
       assert(r.getAs[Long]("batch_id") === 7L)
     }
     assert(spark.read.parquet(s"$okOut/fact_offre").count() === 2)
+    // a second batch's report appends to the same table, with its own id
+    StreamingPipeline.loadBatch(lakeOf("u3", "u4"), okOut, batchId = 9L)
+    val audits = spark.read.parquet(s"$okOut/load_audit")
+    assert(audits.schema.map(f => f.name -> f.dataType) === Seq(
+      "constraint" -> StringType, "violations" -> LongType,
+      "passed" -> BooleanType, "batch_id" -> LongType))
+    assert(audits.collect().map(r => (r.getLong(3), r.getString(0))).sorted.toSeq ===
+      Seq(7L, 9L).flatMap(b => StreamingPipeline.offerChecks.map(b -> _._1).sorted))
 
     // failing expectation: batch diverted, warehouse untouched
     val badOut = Files.createTempDirectory("graft_gate_bad").toString

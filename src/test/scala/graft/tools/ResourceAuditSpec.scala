@@ -39,6 +39,16 @@ class ResourceAuditSpec extends AnyFunSuite {
     assert(m.taskSpread === 1.0)
   }
 
+  test("measure counts the classes its action compiled; a cached plan compiles none") {
+    // a literal no other spec uses: its generated code is new to the JVM
+    def run() = spark.range(10).selectExpr("id * 7919 + 104729 AS v")
+      .agg(org.apache.spark.sql.functions.sum("v")).collect()
+    val (_, first) = ResourceAudit.measure(spark)(run())
+    assert(first.compiles > 0L, "a new plan compiled no class")
+    val (_, again) = ResourceAudit.measure(spark)(run())
+    assert(again.compiles === 0L, "the same plan compiled again")
+  }
+
   test("a broadcast join moves (almost) no shuffle bytes; the audit shows it") {
     import org.apache.spark.sql.functions.broadcast
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
